@@ -1,7 +1,8 @@
 """Deduplication operators for web-scale training-data pipelines.
 
-All variants are pure DataFrame plans (shuffle-conscious, no Python in
-the hot path):
+All variants are DataFrame plans (shuffle-conscious); per-document
+shingle, signature and fingerprint work runs as whole-batch Arrow
+stages over JVM-tokenized text:
 
 - exact:        hash-groupBy on a normalized-text fingerprint. One
                 shuffle on the digest; map-side partial agg applies.
@@ -12,10 +13,11 @@ the hot path):
 - simhash:      64-bit token-vote hash; near-dups collide in >= one of
                 4 16-bit bands (hamming <= 3 within 64 bits is caught
                 by banding w.h.p.); verify by popcount on candidates.
-- n-gram jaccard: exact verification join over distinct shingles with a
-                hot-shingle cap (drop shingles shared by > cap docs —
-                stopword-like shingles otherwise quadratically explode
-                the candidate space at 10^12 docs).
+- n-gram jaccard: exact blocked all-pairs comparison, or a verification
+                join over distinct shingles with a hot-shingle cap
+                (drop shingles shared by > cap docs — stopword-like
+                shingles otherwise quadratically explode the candidate
+                space at 10^12 docs).
 - embedding cosine: near-dup by cosine >= threshold within sign-LSH
                 buckets (see operators/similarity.py for the LSH).
 
@@ -191,138 +193,63 @@ def dedup_exact(
 # ----------------------------------------------------------- shingles
 
 
-def word_shingles(text_col, n: int = 3):
-    """Distinct word n-gram shingle array over normalized text; docs
-    shorter than n words get their whole text as one shingle. NULL text
-    behaves like '' (one empty shingle) — same rule as shingle_rows."""
-    toks = T.tokens(T.normalized(F.coalesce(text_col, F.lit(""))))
-    cnt = F.size(toks)
-    return F.array_distinct(
-        F.when(
-            cnt >= n,
-            F.transform(
-                F.sequence(F.lit(0), cnt - n),
-                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-            ),
-        ).otherwise(F.array(F.array_join(toks, " ")))
-    )
-
-
 def shingle_rows(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
     distinct: bool = True,
-    impl: str = "auto",
 ) -> DataFrame:
-    """Word n-gram shingles as ROWS: (id, shingle), the corpus-scale
-    twin of :func:`word_shingles`.
+    """Word n-gram shingles as ROWS: (id, shingle). Docs shorter than n
+    tokens contribute their whole text as one shingle ('' for empty or
+    NULL text).
 
-    impl='auto' (default, round 6): 'pandas' when the source is big
-    enough to amortize an Arrow stage (>= 4 MB, same size-adaptive
-    rule as queries._par), else 'window'. impl='pandas': tokenization
-    stays a JVM
-    expression (normalize + split — charset/locale semantics identical
-    to every other consumer of T.tokens), and ONLY the adjacent-token
-    join runs in an Arrow batch (guide §4.2: hand whole batches to
-    native code): per batch one python pass builds every shingle by
-    slicing the already-tokenized lists — byte-identical strings, since
-    joining JVM-produced tokens with ' ' is charset-neutral. This
-    removes the lead()-window's exchange + sort of the full token
-    stream AND (for distinct=True) the (id, shingle) dedup shuffle —
-    per-doc sets fold into the same pass, exactly equivalent because
-    duplicate shingles only exist within a document. Measured: the
-    minhash signature stage 4.5 s -> 2.5 s at sf1.0, hash-identical.
+    Tokenization stays a JVM expression (normalize + split — charset/
+    locale semantics identical to every other consumer of T.tokens),
+    and ONLY the adjacent-token join runs in an Arrow batch (guide
+    §4.2: hand whole batches to native code): per batch one python pass
+    builds every shingle by slicing the already-tokenized lists —
+    byte-identical strings, since joining JVM-produced tokens with ' '
+    is charset-neutral. For distinct=True the per-doc sets fold into
+    the same pass (duplicate shingles only exist within a document), so
+    the plan is scan -> one Python stage, no exchange.
 
-    impl='window' keeps the previous pure-plan shape (explode +
-    codegen'd lead window; the union small-doc branch): tokens with
-    positions -> shingle_i = tok_i..tok_{i+n-1} via lead(); useful when
-    a zero-Python plan is required. Both impls: docs shorter than n
-    tokens contribute their whole text as one shingle (matching
-    word_shingles, including '' for empty/NULL text).
-
-    Set distinct=False when the consumer is min-aggregation (min over a
-    multiset equals min over the set — skips the per-doc set build /
-    dedup shuffle).
+    Set distinct=False when the consumer is min-aggregation or a
+    distinct count (the result over a multiset equals the result over
+    the set — skips the per-doc set build).
     """
-    # NULL text must behave like '' (one empty shingle), not vanish:
-    # under ANSI NULL semantics both ntok<n and ntok>=n filters are NULL
-    # for NULL text and the document would silently drop out.
-    norm = T.normalized(F.coalesce(F.col(text_col), F.lit("")))
-    toks_arr = T.tokens(norm)
-    if impl == "auto":
-        # size-adaptive (same rule/threshold as queries._par): the
-        # Arrow pass pays a fixed JVM<->Python round-trip per stage
-        # (~0.3 s) that only amortizes once the source is more than a
-        # few MB; tiny/oracle corpora keep the pure-plan window shape.
-        from .queries import _input_bytes
+    import pandas as pd
 
-        impl = "pandas" if _input_bytes(df) >= 4 * 1024 * 1024 else "window"
-    if impl == "pandas":
-        import pandas as pd
+    # NULL text must behave like '' (one empty shingle), not vanish.
+    toks_arr = T.tokens(T.normalized(F.coalesce(F.col(text_col), F.lit(""))))
+    id_ddl = df.schema[id_col].dataType.simpleString()
+    base = df.select(F.col(id_col).alias("id"), toks_arr.alias("toks"))
 
-        id_ddl = df.schema[id_col].dataType.simpleString()
-        base = df.select(F.col(id_col).alias("id"), toks_arr.alias("toks"))
+    def _build(batches):
+        for b in batches:
+            ids: list = []
+            outs: list = []
+            for i, toks in zip(b["id"], b["toks"]):
+                toks = list(toks)
+                if len(toks) >= n:
+                    sh = [
+                        " ".join(toks[j : j + n])
+                        for j in range(len(toks) - n + 1)
+                    ]
+                    if distinct:
+                        sh = list(dict.fromkeys(sh))
+                else:
+                    sh = [" ".join(toks)]
+                ids.extend([i] * len(sh))
+                outs.extend(sh)
+            yield pd.DataFrame({"id": ids, "shingle": outs})
 
-        def _build(batches):
-            for b in batches:
-                ids: list = []
-                outs: list = []
-                for i, toks in zip(b["id"], b["toks"]):
-                    toks = list(toks)
-                    if len(toks) >= n:
-                        sh = [
-                            " ".join(toks[j : j + n])
-                            for j in range(len(toks) - n + 1)
-                        ]
-                        if distinct:
-                            sh = list(dict.fromkeys(sh))
-                    else:
-                        sh = [" ".join(toks)]
-                    ids.extend([i] * len(sh))
-                    outs.extend(sh)
-                yield pd.DataFrame({"id": ids, "shingle": outs})
-
-        # one wave of maximal tasks (shuffle-free; no-op when the
-        # input is not over-spread) — Arrow stages carry fixed
-        # per-task setup, and a second wave measured 0.2-0.35 s
-        # slower per stage at the 50k tier (same rule as the
-        # signature stage)
-        base = base.coalesce(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-        return base.mapInPandas(_build, schema=f"id {id_ddl}, shingle string")
-    if impl != "window":
-        raise ValueError(f"unknown shingle impl {impl!r}")
-    base = df.select(
-        F.col(id_col).alias("id"),
-        toks_arr.alias("toks"),
-        F.size(toks_arr).alias("ntok"),
-    )
-    small = base.where(F.col("ntok") < n).select(
-        "id", F.array_join("toks", " ").alias("shingle")
-    )
-    pos_toks = (
-        base.where(F.col("ntok") >= n)
-        .select("id", F.posexplode("toks").alias("pos", "tok"))
-    )
-    w = Window.partitionBy("id").orderBy("pos")
-    leads = [F.col("tok")] + [
-        F.lead("tok", j).over(w).alias(f"t{j}") for j in range(1, n)
-    ]
-    big = (
-        pos_toks.select("id", *leads)
-        .where(F.col(f"t{n-1}").isNotNull())
-        .select(
-            "id",
-            F.concat_ws(
-                " ", "tok", *[f"t{j}" for j in range(1, n)]
-            ).alias("shingle"),
-        )
-    )
-    out = big.unionByName(small)
-    return out.dropDuplicates(["id", "shingle"]) if distinct else out
+    # one wave of maximal tasks (shuffle-free; no-op when the input is
+    # not over-spread) — Arrow stages carry fixed per-task setup, and a
+    # second wave measured 0.2-0.35 s slower per stage at the 50k tier
+    # (same rule as the signature stage)
+    base = base.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+    return base.mapInPandas(_build, schema=f"id {id_ddl}, shingle string")
 
 
 def _jaccard_pairs_blocked(
@@ -332,21 +259,17 @@ def _jaccard_pairs_blocked(
     self-comparison: docs hash into ``n_blocks`` deterministic blocks
     (retry-safe, guide §2.5); one Arrow task per unordered block pair
     enumerates every shingle co-occurrence between its two blocks in
-    numpy (the same candidate multiset the shingle self-join emits,
-    Σ_g occ_i(g)·occ_j(g) rows in C instead of a corpus-wide shuffle),
-    counts pairs with a sort + run-length pass, and applies the rounded
-    threshold INSIDE the task — only surviving pairs (plus their
-    exactly-replicated ``round(j, 4)`` value, similarity._round4_spark
-    semantics) ever reach Spark. This removes the two heaviest
-    operators of the join shape at sf1.0: the ~127M-candidate-row
-    exchange and the ~114M-group hash aggregate (the measured 13 s
-    floor). ``per_doc`` carries (id, _tk): the JVM-tokenized token
-    array — 3x fewer replicated bytes than the shingle set, and no
-    collect_set shuffle; each task builds its docs' DISTINCT shingle
-    sets with the same adjacent-token join as shingle_rows' pandas
-    impl (byte-identical strings — joining JVM tokens with ' ' is
-    charset-neutral), short docs contributing their whole text as one
-    shingle."""
+    numpy (Σ_g occ_i(g)·occ_j(g) rows in C instead of a corpus-wide
+    shuffle of candidate rows), counts pairs with a sort + run-length
+    pass, and applies the rounded threshold INSIDE the task — only
+    surviving pairs (plus their exactly-replicated ``round(j, 4)``
+    value, similarity._round4_spark semantics) ever reach Spark.
+    ``per_doc`` carries (id, _tk): the JVM-tokenized token array — 3x
+    fewer replicated bytes than the shingle set, and no collect_set
+    shuffle; each task builds its docs' DISTINCT shingle sets with the
+    same adjacent-token join as shingle_rows (byte-identical strings —
+    joining JVM tokens with ' ' is charset-neutral), short docs
+    contributing their whole text as one shingle."""
     from .similarity import _round4_ge_boundary, _round4_spark
 
     bound = _round4_ge_boundary(threshold)
@@ -460,149 +383,69 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     hot_shingle_cap: int | None = 1000,
-    pair_impl: str = "auto",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs >= threshold.
-
-    Plan: explode distinct shingles -> drop shingles hotter than
-    `hot_shingle_cap` docs (quadratic-blowup guard; None = exact mode,
-    no filter — takes a cheaper plan shape, see below) -> self-join on
-    the shingle -> per-pair intersection count -> |A∪B| = |A|+|B|-|A∩B|.
     -> (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded 4.
 
-    The hot-shingle drop is a window count over the shingle (one pass,
-    shuffled on the key the self-join needs anyway), not a counts
-    anti-join that would make the shingle explode a 4th consumer of
-    itself; pair counting stays a streaming sort-merge self-join —
-    shingles are non-null by construction (token concat), so the
-    window form drops exactly what the anti-join did.
+    hot_shingle_cap=None (exact mode, the oracle-checked query): the
+    blocked all-pairs comparison (:func:`_jaccard_pairs_blocked`) over
+    the JVM-tokenized text — no shingle rows, no self-join.
+
+    With a cap: distinct shingles (:func:`shingle_rows`) -> drop
+    shingles hotter than ``hot_shingle_cap`` docs (quadratic-blowup
+    guard) -> self-join on the shingle -> per-pair intersection count
+    -> |A∪B| = |A|+|B|-|A∩B|. The hot-shingle drop is a window count
+    over the shingle (one pass, shuffled on the key the self-join needs
+    anyway), not a counts anti-join that would make the shingle stage
+    another consumer of itself; shingles are non-null by construction
+    (token concat), so the window form drops exactly what the
+    anti-join did.
     """
     if hot_shingle_cap is None:
-        # EXACT mode (the oracle-checked query): no hot-shingle filter,
-        # so the `_df <= cap` window would be a tautology — skip it
-        # (2 exchanges + sorts of the full shingle stream, per join
-        # side) and fuse the (id, shingle) distinct + per-doc size into
-        # ONE collect_set aggregate keyed on id, which rides the id
-        # partitioning shingle_rows' lead-window already established
-        # (the dropDuplicates + size-window form paid two more
-        # exchanges because the short-doc union branch breaks the
-        # window's partitioning). The result is then EAGERLY
-        # lineage-truncated: the self-join consumes it twice, and with
-        # no ReusedExchange under AQE each lazy consumer re-ran the
-        # whole tokenize+explode+lead pipeline (CLAUDE.md rule) — the
-        # checkpoint also gives the planner REAL size stats, which
-        # stops AQE broadcast-hashing a multi-million-row shingle
-        # table (observed at sf1.0: the whole 2.6M-row side was
-        # broadcast on string-column size estimates).
-        # Checkpoint the per-doc shingle SETS (50k compact array rows),
-        # explode per consumer: the self-join sides then carry ONLY
-        # (id, shingle) — the per-doc size does NOT ride the
-        # candidate fan-out (16 fewer bytes on every one of the ~127M
-        # candidate rows at sf1.0) and is instead broadcast-joined onto
-        # the aggregated pair table from the same checkpoint.
-        if pair_impl == "auto":
-            # same size-adaptive rule as queries._par / shingle impl:
-            # the blocked shape pays a B× replication of the compact
-            # per-doc sets, which only amortizes once the join shape's
-            # candidate explosion is the dominant cost.
-            from .queries import _input_bytes
+        import math
 
-            pair_impl = (
-                "blocked"
-                if _input_bytes(df) >= 4 * 1024 * 1024
-                else "join"
-            )
-        if pair_impl == "blocked":
-            import math
+        from .queries import _input_bytes
 
-            from .queries import _input_bytes
-
-            par = df.sparkSession.sparkContext.defaultParallelism
-            # replication bytes scale with B (every doc ships to B
-            # tasks), so the SMALLEST B that still fills the cluster
-            # wins: ~1.5-2 waves of block-pair tasks (B(B+1)/2 ≈
-            # 3·par). Measured at 50k docs on local[32]: B=10 3.83 s
-            # vs B=14 4.1-4.6 s vs B=28 4.3-4.8 s — each step up pays
-            # more replication than the smoother scheduling buys. The
-            # size term still dominates at scale: blocks no bigger
-            # than ~16 MB of source text keeps the per-task candidate
-            # count (Σ_g occ_i·occ_j ≈ block_rows² / vocab) FLAT as
-            # the corpus grows — B ∝ N bounds every task while the
-            # task count absorbs the quadratic total.
-            B = max(
-                math.ceil(math.sqrt(3 * par)),
-                math.ceil(_input_bytes(df) / (16 * 1024 * 1024)),
-            )
-            B = min(B, 256)
-            toks = df.select(
-                F.col(id_col).alias("id"),
-                T.tokens(
-                    T.normalized(F.coalesce(F.col(text_col), F.lit("")))
-                ).alias("_tk"),
-            )
-            id_ddl = df.schema[id_col].dataType.simpleString()
-            return _jaccard_pairs_blocked(toks, n, id_ddl, threshold, B)
-        if pair_impl != "join":
-            raise ValueError(f"unknown pair_impl {pair_impl!r}")
-        sh = shingle_rows(df, id_col, text_col, n, distinct=False)
-        per_doc = _truncate_lineage(
-            sh.groupBy("id").agg(F.collect_set("shingle").alias("_ss"))
+        par = df.sparkSession.sparkContext.defaultParallelism
+        # replication bytes scale with B (every doc ships to B tasks),
+        # so the SMALLEST B that still fills the cluster wins: ~1.5-2
+        # waves of block-pair tasks (B(B+1)/2 ≈ 3·par). Measured at 50k
+        # docs on local[32]: B=10 3.83 s vs B=14 4.1-4.6 s vs B=28
+        # 4.3-4.8 s — each step up pays more replication than the
+        # smoother scheduling buys. The size term still dominates at
+        # scale: blocks no bigger than ~16 MB of source text keeps the
+        # per-task candidate count (Σ_g occ_i·occ_j ≈ block_rows² /
+        # vocab) FLAT as the corpus grows — B ∝ N bounds every task
+        # while the task count absorbs the quadratic total.
+        B = max(
+            math.ceil(math.sqrt(3 * par)),
+            math.ceil(_input_bytes(df) / (16 * 1024 * 1024)),
         )
-        sizes = per_doc.select(
-            "id", F.size("_ss").cast("bigint").alias("sz")
+        B = min(B, 256)
+        toks = df.select(
+            F.col(id_col).alias("id"),
+            T.tokens(
+                T.normalized(F.coalesce(F.col(text_col), F.lit("")))
+            ).alias("_tk"),
         )
-        rows = per_doc.select("id", F.explode("_ss").alias("shingle"))
-        a, b = rows.alias("a"), rows.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-            )
-            .agg(F.count("*").alias("inter"))
+        id_ddl = df.schema[id_col].dataType.simpleString()
+        return _jaccard_pairs_blocked(toks, n, id_ddl, threshold, B)
+    sh = shingle_rows(df, id_col, text_col, n, distinct=True)
+    # sizes over the SAME filtered shingle space as the intersections —
+    # mixing unfiltered |A| with filtered |A∩B| would systematically
+    # underestimate jaccard whenever the cap is active. The size is a
+    # second window count CARRIED THROUGH the self-join (constant per
+    # id, so first() per pair recovers it) rather than a separate sizes
+    # table joined twice: each extra consumer re-evaluates the shingle
+    # stage.
+    cool = (
+        sh.withColumn(
+            "_df", F.count("*").over(Window.partitionBy("shingle"))
         )
-        sa = F.broadcast(
-            sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-        )
-        sb = F.broadcast(
-            sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-        )
-        return (
-            pairs.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("inter")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                    4,
-                ),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    else:
-        sh = shingle_rows(df, id_col, text_col, n, distinct=True)
-        # sizes over the SAME filtered shingle space as the
-        # intersections — mixing unfiltered |A| with filtered |A∩B|
-        # would systematically underestimate jaccard whenever the cap
-        # is active. The size is a second window count CARRIED THROUGH
-        # the self-join (constant per id, so first() per pair recovers
-        # it) rather than a separate sizes table joined twice: the
-        # shingle pipeline (tokenize + explode + lead-window) is the
-        # expensive stage, and each extra consumer re-evaluates it.
-        cool = (
-            sh.withColumn(
-                "_df",
-                F.count("*").over(Window.partitionBy("shingle")),
-            )
-            .where(F.col("_df") <= hot_shingle_cap)
-            .withColumn("sz", F.count("*").over(Window.partitionBy("id")))
-            .select("id", "shingle", "sz")
-        )
+        .where(F.col("_df") <= hot_shingle_cap)
+        .withColumn("sz", F.count("*").over(Window.partitionBy("id")))
+        .select("id", "shingle", "sz")
+    )
     a = cool.alias("a")
     b = cool.alias("b")
     return (
@@ -817,13 +660,10 @@ def contamination_hits(
     Scale shape: the benchmark side reduces to a distinct-shingle set
     and is BROADCAST (eval suites are ~10^5-10^6 docs against a 10^12
     corpus — the asymmetry is the point); the corpus-side shingle pass
-    is the same codegen'd explode+lead shape as dedup, and the per-id
-    hit count groups on the id-partitioning shingle_rows already
-    produced, so the corpus is never shuffled by this operator."""
-    # distinct=False skips a corpus-wide (id, shingle) dedup shuffle:
-    # the per-id DISTINCT matched-shingle count in the aggregation
-    # gives the same number, and the groupBy reuses shingle_rows' id
-    # partitioning (no extra exchange on the corpus side).
+    is the same Arrow stage as dedup, and only the shingles that hit
+    the broadcast set reach the per-id count's shuffle."""
+    # distinct=False skips the per-doc set build: the per-id DISTINCT
+    # matched-shingle count in the aggregation gives the same number.
     sc = shingle_rows(corpus, id_col, text_col, n, distinct=False)
     sb = (
         shingle_rows(benchmark, id_col, text_col, n, distinct=True)
@@ -868,189 +708,121 @@ def decontaminate(
 # ------------------------------------------------------------ minhash
 
 
-def minhash_signature(text_col, k: int = 16, n: int = 3):
-    """K-wise minhash over n-gram shingles: component i = min over
-    shingles of md5(i || ':' || shingle). md5 keeps the signature
-    reproducible in any engine (oracle-checkable); mins over hex
-    strings are order-isomorphic to mins over the underlying bits."""
-    sh = word_shingles(text_col, n)
-
-    def _mh(seed: int):
-        # NOTE: a two-parameter lambda in F.transform means
-        # (element, index) to Spark — the seed must close over a
-        # single-parameter lambda, never ride as a default arg.
-        return F.array_min(
-            F.transform(
-                sh,
-                lambda s: F.md5(
-                    F.encode(F.concat(F.lit(f"{seed}:"), s), "utf-8")
-                ),
-            )
-        )
-
-    return F.array(*[_mh(i).alias(f"mh{i}") for i in range(k)])
-
-
 def minhash_signatures_agg(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 16,
     n: int = 3,
-    impl: str = "auto",
     carry: dict | None = None,
 ) -> DataFrame:
     """Scalable minhash: one pass over the corpus, K minima per doc.
-    -> (id, *carry, sig: array<string> length K). ``carry`` maps
-    output column name -> per-doc Column expression over ``df`` (e.g.
-    the exact-dedup fingerprint): the pandas impl evaluates it JVM-side
-    in the SAME projection and passes it through the Arrow stage —
-    signature_table then needs no (id ⋈ id) join of two 50k-row
-    consumers; the agg impl joins the carry projection back on id
-    (its aggregate cannot pass columns through).
+    Component i = min over the doc's shingles of md5(i || ':' ||
+    shingle) — md5 keeps the signature reproducible in any engine
+    (oracle-checkable); mins over hex strings are order-isomorphic to
+    mins over the underlying bits. -> (id, *carry, sig: array<string>
+    length K). ``carry`` maps output column name -> per-doc Column
+    expression over ``df`` (e.g. the exact-dedup fingerprint),
+    evaluated JVM-side in the SAME projection and passed through the
+    Arrow stage — signature_table then needs no (id ⋈ id) join of two
+    one-row-per-doc consumers.
 
-    impl='agg': explode shingles ONCE (the expression-only
-    :func:`minhash_signature` recomputes the shingle array per
-    component — Catalyst does not CSE across lambda functions), then K
-    min-aggregates with map-side partial aggregation. Pure-plan, but
-    pays K JVM md5 calls per shingle INSTANCE (~42M at sf1.0) plus the
-    groupBy exchange.
-
-    impl='pandas' (r6): the whole signature folds into the SAME Arrow
-    stage that builds shingles — tokenization stays a JVM expression
-    (identical normalize/split semantics), each task md5-hashes every
-    DISTINCT shingle it sees once per seed (a per-task memo dict: a
-    pure-function cache that dies with the task — repeated shingles
-    across a task's docs stop paying K md5s each; on a huge-vocabulary
-    corpus it degrades gracefully to the same md5 count the agg does)
-    and takes the per-doc minima with a numpy byte-wise min (hex
-    digests are ASCII, so bytes order == Spark's UTF8 string min, and
-    hashlib.md5 produces the identical lowercase hex as Spark's md5
-    over the identical UTF-8 encode of f'{seed}:{shingle}'). NO
-    exchange at all — the source is already one row per doc. Measured
-    3.1 s -> ~0.8 s for the signature stage at the 50k-doc tier,
-    hash-identical.
-
-    impl='auto' (default): 'pandas' when the source is big enough to
-    amortize the Arrow stage (>= 4 MB, the shared size-adaptive rule),
-    else 'agg'.
+    The whole signature folds into ONE Arrow stage that builds the
+    shingles: tokenization stays a JVM expression (identical normalize/
+    split semantics), each task md5-hashes every DISTINCT shingle it
+    sees once per seed (a per-task memo dict: a pure-function cache
+    that dies with the task — repeated shingles across a task's docs
+    stop paying K md5s each) and takes the per-doc minima over raw
+    digests (hashlib.md5 produces the identical lowercase hex as
+    Spark's md5 over the identical UTF-8 encode of f'{seed}:{shingle}').
+    NO exchange at all — the source is already one row per doc.
     """
-    if impl == "auto":
-        from .queries import _input_bytes
-
-        impl = "pandas" if _input_bytes(df) >= 4 * 1024 * 1024 else "agg"
     carry = carry or {}
-    if impl == "pandas":
-        id_ddl = df.schema[id_col].dataType.simpleString()
-        # Ship the NORMALIZED text (one string per doc), not the token
-        # array: T.tokens is an interpreted higher-order filter over
-        # every token (CLAUDE.md rule) and the array crosses Arrow as
-        # millions of cells. After T.normalized (JVM-side — lowercase
-        # stays locale-exact) the string is trimmed with single ASCII
-        # spaces, so python str.split(" ") reproduces
-        # tokens(normalized(x)) exactly (empty string -> no tokens).
-        base = df.select(
-            F.col(id_col).alias("id"),
-            *[c.alias(name) for name, c in carry.items()],
-            T.normalized(F.coalesce(F.col(text_col), F.lit(""))).alias(
-                "_nt"
-            ),
-        )
-        # ONE wave of maximal tasks: per-task cost has a fixed
-        # memo-rebuild component (every task re-hashes the distinct
-        # shingles IT sees — 16 md5s each), so 2x-parallelism spread
-        # inputs pay ~2x the redundant hashing plus a second wave.
-        # coalesce is shuffle-free (merges the spread partitions),
-        # scale-adaptive via defaultParallelism, and a no-op when the
-        # input already has that many partitions or fewer (NEVER probe
-        # .rdd.getNumPartitions() here — materializing the RDD of an
-        # AQE plan executes its upstream stages eagerly). Measured
-        # 1.68 s -> 1.20 s for the signature stage at the 50k-doc tier.
-        base = base.coalesce(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-        carry_ddl = ", ".join(
-            f"{name} {base.schema[name].dataType.simpleString()}"
-            for name in carry
-        )
-        prefixes = [f"{i}:".encode() for i in range(k)]
-
-        def _sigs(batches):
-            import hashlib
-
-            import pandas as pd
-
-            memo: dict = {}
-            md5 = hashlib.md5
-
-            def _vec(s: str) -> list:
-                v = memo.get(s)
-                if v is None:
-                    b = s.encode("utf-8")
-                    # BINARY digests: hex is a byte-monotone rendering,
-                    # so min over raw 16-byte digests == min over hex —
-                    # only the K per-doc WINNERS pay .hex() (16/doc vs
-                    # 16/distinct-shingle; hexdigest was ~25% of the
-                    # stage's profiled python wall)
-                    v = [md5(p + b).digest() for p in prefixes]
-                    # bound worker memory on huge-vocabulary tasks
-                    # (~200k entries ≈ 150 MB of digests); the
-                    # degenerate small-vocab regime the memo targets
-                    # never reaches the cap
-                    if len(memo) >= 200_000:
-                        memo.clear()
-                    memo[s] = v
-                return v
-
-            for batch in batches:
-                sigs: list = []
-                for nt in batch["_nt"]:
-                    toks = nt.split(" ") if nt else []
-                    if len(toks) >= n:
-                        ss = dict.fromkeys(
-                            " ".join(toks[j : j + n])
-                            for j in range(len(toks) - n + 1)
-                        )
-                    else:
-                        ss = (" ".join(toks),)
-                    vecs = [_vec(s) for s in ss]
-                    mins = (
-                        vecs[0]
-                        if len(vecs) == 1
-                        else [min(col) for col in zip(*vecs)]
-                    )
-                    sigs.append([m.hex() for m in mins])
-                out = batch.drop(columns=["_nt"])
-                out["sig"] = sigs
-                yield out
-
-        cols = f", {carry_ddl}" if carry_ddl else ""
-        return base.mapInPandas(
-            _sigs, schema=f"id {id_ddl}{cols}, sig array<string>"
-        )
-    if impl != "agg":
-        raise ValueError(f"unknown minhash impl {impl!r}")
-    # min over the shingle multiset == min over the set: distinct=False
-    # saves the dedup shuffle. The window inside shingle_rows already
-    # hash-partitions by id, which is exactly what the groupBy needs.
-    sh = shingle_rows(df, id_col, text_col, n, distinct=False)
-    aggs = [
-        F.min(
-            F.md5(F.encode(F.concat(F.lit(f"{i}:"), F.col("shingle")), "utf-8"))
-        ).alias(f"mh{i}")
-        for i in range(k)
-    ]
-    out = sh.groupBy("id").agg(*aggs)
-    out = out.select(
-        "id", F.array(*[F.col(f"mh{i}") for i in range(k)]).alias("sig")
+    id_ddl = df.schema[id_col].dataType.simpleString()
+    # Ship the NORMALIZED text (one string per doc), not the token
+    # array: T.tokens is an interpreted higher-order filter over
+    # every token (CLAUDE.md rule) and the array crosses Arrow as
+    # millions of cells. After T.normalized (JVM-side — lowercase
+    # stays locale-exact) the string is trimmed with single ASCII
+    # spaces, so python str.split(" ") reproduces
+    # tokens(normalized(x)) exactly (empty string -> no tokens).
+    base = df.select(
+        F.col(id_col).alias("id"),
+        *[c.alias(name) for name, c in carry.items()],
+        T.normalized(F.coalesce(F.col(text_col), F.lit(""))).alias(
+            "_nt"
+        ),
     )
-    if carry:
-        proj = df.select(
-            F.col(id_col).alias("id"),
-            *[c.alias(name) for name, c in carry.items()],
-        )
-        out = proj.join(out, "id").select("id", *carry, "sig")
-    return out
+    # ONE wave of maximal tasks: per-task cost has a fixed
+    # memo-rebuild component (every task re-hashes the distinct
+    # shingles IT sees — 16 md5s each), so 2x-parallelism spread
+    # inputs pay ~2x the redundant hashing plus a second wave.
+    # coalesce is shuffle-free (merges the spread partitions),
+    # scale-adaptive via defaultParallelism, and a no-op when the
+    # input already has that many partitions or fewer (NEVER probe
+    # .rdd.getNumPartitions() here — materializing the RDD of an
+    # AQE plan executes its upstream stages eagerly). Measured
+    # 1.68 s -> 1.20 s for the signature stage at the 50k-doc tier.
+    base = base.coalesce(
+        df.sparkSession.sparkContext.defaultParallelism
+    )
+    carry_ddl = ", ".join(
+        f"{name} {base.schema[name].dataType.simpleString()}"
+        for name in carry
+    )
+    prefixes = [f"{i}:".encode() for i in range(k)]
+
+    def _sigs(batches):
+        import hashlib
+
+        memo: dict = {}
+        md5 = hashlib.md5
+
+        def _vec(s: str) -> list:
+            v = memo.get(s)
+            if v is None:
+                b = s.encode("utf-8")
+                # BINARY digests: hex is a byte-monotone rendering,
+                # so min over raw 16-byte digests == min over hex —
+                # only the K per-doc WINNERS pay .hex() (16/doc vs
+                # 16/distinct-shingle; hexdigest was ~25% of the
+                # stage's profiled python wall)
+                v = [md5(p + b).digest() for p in prefixes]
+                # bound worker memory on huge-vocabulary tasks
+                # (~200k entries ≈ 150 MB of digests); the
+                # degenerate small-vocab regime the memo targets
+                # never reaches the cap
+                if len(memo) >= 200_000:
+                    memo.clear()
+                memo[s] = v
+            return v
+
+        for batch in batches:
+            sigs: list = []
+            for nt in batch["_nt"]:
+                toks = nt.split(" ") if nt else []
+                if len(toks) >= n:
+                    ss = dict.fromkeys(
+                        " ".join(toks[j : j + n])
+                        for j in range(len(toks) - n + 1)
+                    )
+                else:
+                    ss = (" ".join(toks),)
+                vecs = [_vec(s) for s in ss]
+                mins = (
+                    vecs[0]
+                    if len(vecs) == 1
+                    else [min(col) for col in zip(*vecs)]
+                )
+                sigs.append([m.hex() for m in mins])
+            out = batch.drop(columns=["_nt"])
+            out["sig"] = sigs
+            yield out
+
+    cols = f", {carry_ddl}" if carry_ddl else ""
+    return base.mapInPandas(
+        _sigs, schema=f"id {id_ddl}{cols}, sig array<string>"
+    )
 
 
 def sig_band_rows(
@@ -1218,130 +990,24 @@ def minhash_dedup_pairs(
     )
 
 
-def rolling_fingerprint_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    hash_fn: str = "xxhash64",
-    impl: str = "auto",
-) -> DataFrame:
-    """Corpus-scale winnowing fingerprint: min hash over `window`-gram
-    shingles (same value as ``functions.textstats.rolling_fingerprint``,
-    but via the codegen'd shingle_rows shape instead of interpreted
-    array slices). -> (id, rolling_fp).
-
-    hash_fn='xxhash64' (default, bigint — fastest JVM-side) or 'md5'
-    (hex string — reproducible in any engine, the oracle-checked form;
-    min over hex strings is order-isomorphic to min over the bits).
-
-    r6 fast path (md5 mode, source >= 4 MB): the whole fingerprint
-    folds into ONE Arrow stage — tokenization stays JVM, the long
-    window-gram strings are built, md5-hashed (hashlib == Spark md5
-    over the same UTF-8 bytes) and min-folded INSIDE the task, so
-    neither the ~window× inflated shingle strings nor their hex
-    digests ever cross a stage boundary, and the min-agg exchange
-    disappears (the source is one row per doc). No memo: window-grams
-    are effectively unique, and a multiset min needs no dedup."""
-    if impl == "auto":
-        from .queries import _input_bytes
-
-        impl = (
-            "pandas"
-            if hash_fn == "md5"
-            and _input_bytes(df) >= 4 * 1024 * 1024
-            else "plan"
-        )
-    if impl == "pandas":
-        if hash_fn != "md5":
-            raise ValueError("pandas impl requires hash_fn='md5'")
-        id_ddl = df.schema[id_col].dataType.simpleString()
-        base = df.select(
-            F.col(id_col).alias("id"),
-            T.tokens(
-                T.normalized(F.coalesce(F.col(text_col), F.lit("")))
-            ).alias("_tk"),
-        )
-        n = window
-
-        def _fp(batches):
-            import hashlib
-
-            for batch in batches:
-                fps: list = []
-                for toks in batch["_tk"]:
-                    toks = list(toks)
-                    if len(toks) >= n:
-                        it = (
-                            " ".join(toks[j : j + n])
-                            for j in range(len(toks) - n + 1)
-                        )
-                    else:
-                        it = (" ".join(toks),)
-                    fps.append(
-                        min(
-                            hashlib.md5(s.encode("utf-8")).hexdigest()
-                            for s in it
-                        )
-                    )
-                out = batch.drop(columns=["_tk"])
-                out["rolling_fp"] = fps
-                yield out
-
-        # one wave of maximal tasks (shuffle-free; no-op when the
-        # input is not over-spread) — Arrow stages carry fixed
-        # per-task setup, and a second wave measured 0.2-0.35 s
-        # slower per stage at the 50k tier (same rule as the
-        # signature stage)
-        base = base.coalesce(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-        return base.mapInPandas(_fp, schema=f"id {id_ddl}, rolling_fp string")
-    if impl != "plan":
-        raise ValueError(f"unknown rolling impl {impl!r}")
-    sh = shingle_rows(df, id_col, text_col, window, distinct=False)
-    h = (
-        F.xxhash64("shingle")
-        if hash_fn == "xxhash64"
-        else F.md5(F.encode(F.col("shingle"), "utf-8"))
-    )
-    return sh.groupBy("id").agg(F.min(h).alias("rolling_fp"))
-
-
 def simhash_rolling_table(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int = 8,
-    impl: str = "auto",
 ) -> DataFrame:
     """Fused (id, sh, rolling_fp) — the md5-mode simhash bit-vote AND
     the window-gram min-md5 winnowing fingerprint computed in ONE
-    Arrow stage (r6). The separate tables' join cost more than either
-    computation (two exchanges + sort-merge of two one-row-per-doc
-    frames); here both per-doc values fall out of the same pass and
-    the query plan is scan -> one Python stage, no exchange. Values
-    are bit-identical to ``simhash_table(hash_fn='md5_60')`` ⋈
-    ``rolling_fingerprint_table(hash_fn='md5')`` (pinned by test):
-    the simhash tokenizer replicates Java's ASCII ``\\s+`` split on
-    RAW text with empty tokens excluded from votes and n, the rolling
-    grams use the shared normalized tokenization, and both hashes are
-    hashlib.md5 == Spark md5 over identical UTF-8 bytes. Falls back to
-    the join of the two pure-plan tables under the 4 MB size gate."""
-    if impl == "auto":
-        from .queries import _input_bytes
-
-        impl = (
-            "pandas" if _input_bytes(df) >= 4 * 1024 * 1024 else "join"
-        )
-    if impl == "join":
-        sh = simhash_table(df, id_col, text_col, hash_fn="md5_60")
-        rolling = rolling_fingerprint_table(
-            df, id_col, text_col, window, hash_fn="md5"
-        )
-        return sh.join(rolling, "id")
-    if impl != "pandas":
-        raise ValueError(f"unknown simhash_rolling impl {impl!r}")
+    Arrow stage: scan -> one Python stage, no exchange. ``sh`` is
+    bit-identical to ``simhash_table(hash_fn='md5_60')``: the simhash
+    tokenizer replicates Java's ASCII ``\\s+`` split on RAW text with
+    empty tokens excluded from votes and n. ``rolling_fp`` is the min
+    md5 hex over the ``window``-gram shingles of the shared normalized
+    tokenization (docs shorter than ``window`` hash their whole text),
+    the winnowing rule of ``functions.textstats.rolling_fingerprint``
+    with md5 in place of xxhash64; both hashes are hashlib.md5 == Spark
+    md5 over identical UTF-8 bytes. Neither the ~window× inflated gram
+    strings nor their hex digests ever cross a stage boundary."""
     id_ddl = df.schema[id_col].dataType.simpleString()
     base = df.select(
         F.col(id_col).alias("id"),
@@ -2101,14 +1767,20 @@ def _neardup_labels(
     id_col: str,
     text_col: str,
     threshold: float,
-    minhash_k: int,
-    bands: int,
-    algorithm: str,
+    minhash_k: int = 16,
+    bands: int = 4,
+    algorithm: str = "label",
 ) -> tuple[DataFrame, int]:
     """Converged (id, label) over the minhash-LSH pair graph's edge
     ENDPOINTS plus the broadcast bound — shared by the component table
     (vertices join) and keep_best (labels joined straight onto the
-    score projection, skipping a comp ⋈ scored shuffle)."""
+    score projection, skipping a comp ⋈ scored shuffle).
+
+    The bound depends on ``algorithm``: for 'label' it is the exact
+    edge-endpoint row count of the labels frame; for 'star' it is the
+    converged canonical EDGE count (star labels omit the component
+    roots). Arithmetic that treats it as the endpoint count (e.g.
+    singletons = n_docs - bound) is valid for 'label' only."""
     pairs = minhash_dedup_pairs(
         df, id_col, text_col, k=minhash_k, bands=bands, threshold=threshold
     )
@@ -2161,7 +1833,7 @@ def keep_best_per_component(
     # endpoint labels broadcast straight onto it — the former
     # comp ⋈ scored equi-join shuffled BOTH 1-row-per-doc tables (r6)
     labels, n_bound = _neardup_labels(
-        df, id_col, text_col, threshold, 16, 4, algorithm
+        df, id_col, text_col, threshold, algorithm=algorithm
     )
     scored = df.select(
         F.col(id_col).alias("doc_id"), score.alias("score")

@@ -21,8 +21,7 @@ Scale shape (the part that must survive 100 TB):
 
 - Feature extraction is ONE codegen'd pass: normalized tokens are
   posexploded, the bigram partner arrives via a window ``lead`` over
-  the per-doc partition (the same explode+lead shape as
-  ``dedup.shingle_rows`` — no interpreted higher-order array
+  the per-doc partition (no interpreted higher-order array
   functions), and each position emits its unigram plus optional bigram
   through a 2-element array explode.
 - Bucket hashing bounds the model: the distributions have exactly

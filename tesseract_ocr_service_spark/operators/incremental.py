@@ -65,10 +65,10 @@ def signature_table(
     """(id, fingerprint, sig) per document — the store row shape.
     fingerprint is the exact-dedup normalized md5; sig the K-component
     md5 minhash (both identical to the one-shot pipeline's). The
-    fingerprint rides the signature pass as a carry column (r6): on the
-    Arrow impl it is evaluated in the same projection and passed
-    through — no second consumer of ``df`` and no (id ⋈ id) join; the
-    small-source agg impl keeps the previous join shape internally."""
+    fingerprint rides the signature pass as a carry column (r6): it is
+    evaluated in the same projection as the Arrow signature stage and
+    passed through — no second consumer of ``df`` and no (id ⋈ id)
+    join."""
     return D.minhash_signatures_agg(
         df,
         id_col,

@@ -278,8 +278,8 @@ def repetition_stats(spark, sf_dir):
     engines).
 
     Scale shape: word stats are per-row array expressions (no shuffle);
-    bigram stats reuse the codegen'd shingle_rows(n=2) shape — one
-    explode + two hash aggregates, map-side combined.
+    bigram stats reuse shingle_rows(n=2) — one Arrow shingle stage +
+    two hash aggregates, map-side combined.
     """
     docs = _docs_par(spark, sf_dir)
     toks = T.tokens(T.normalized(F.coalesce(F.col("text"), F.lit(""))))
@@ -610,9 +610,9 @@ def neardup_cluster_sizes(spark, sf_dir):
     # aggregate over the labels frame plus one computed row replaces
     # building and re-aggregating the full 1-row-per-doc component
     # table (the vertices join + a 50k-row groupBy).
+    # algorithm='label' (the default): its bound is the endpoint count
     labels, n_endpoints = D._neardup_labels(
-        _docs_par(spark, sf_dir, mult=1), "doc_id", "text", 0.7, 16, 4,
-        "label",
+        _docs_par(spark, sf_dir, mult=1), "doc_id", "text", 0.7
     )
     n_docs = _docs(spark, sf_dir).count()
     hist = (

@@ -171,6 +171,30 @@ def test_connected_components_nonconvergence_raises(spark):
     assert out.count() == n
 
 
+@pytest.mark.parametrize("regime", ["broadcast", "shuffle"])
+def test_label_propagation_max_iter_boundary(spark, monkeypatch, regime):
+    """Both loop shapes of min-label propagation give max_iter the same
+    meaning: a 6-node path converges after exactly 5 rounds (seed label
+    least(id, min neighbor) then 4 update rounds carry label 1 to node
+    6, and the fifth round confirms the fixed point). The broadcast
+    branch probes before its update, the shuffle branch after it — both
+    must raise at max_iter=4 and return all-1 labels at max_iter=5."""
+    if regime == "shuffle":
+        # no endpoint count fits under the cap: the at-scale branch
+        monkeypatch.setattr(D, "_BCAST_ROWS_CAP", -1)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "src long, dst long"
+    )
+    verts = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
+    with pytest.raises(RuntimeError, match="NOT converged after 4 rounds"):
+        D.connected_components(edges, verts, max_iter=4)
+    got = {
+        (r["id"], r["component_id"])
+        for r in D.connected_components(edges, verts, max_iter=5).collect()
+    }
+    assert got == {(i, 1) for i in range(1, 7)}
+
+
 def test_star_contraction_matches_label_propagation(spark):
     """Large-star/small-star contraction (Kiveris et al.) agrees with
     min-label propagation on hand and pseudo-random graphs."""

@@ -106,10 +106,10 @@ def test_lsh_pair_plans_scan_upstream_minimally(spark):
     simhash_pairs evaluated its tokenize + 64-bit-sum stage 4x and
     ngram_jaccard_pairs its shingle pipeline 5x. Pin the physical
     scan-node counts: simhash = 2 (the two streaming self-join
-    aliases); ngram = 4 (two aliases x the 2-branch union inside
-    shingle_rows — per-doc sizes are window counts carried through the
-    join, NOT a separate sizes table joined twice); embedding = 3 (1
-    bucket aggregation + 2 cheap vector join-backs)."""
+    aliases); ngram = 2 (one Arrow shingle stage per self-join alias —
+    per-doc sizes are window counts carried through the join, NOT a
+    separate sizes table joined twice); embedding = 1 (vectors ride
+    the band fan-out)."""
     from tesseract_ocr_service_spark.operators import dedup as D
     from tesseract_ocr_service_spark.operators import similarity as S
 
@@ -130,14 +130,12 @@ def test_lsh_pair_plans_scan_upstream_minimally(spark):
     assert (
         _scans(D.simhash_pairs_multi_index(docs), "documents.parquet") == 1
     )
-    # round 6, both shingle impls pinned: at sf0.001 impl='auto'
-    # resolves to the pure-plan window shape (union small-doc branch:
-    # 2 aliases x 2 branches = 4 scans); the >=4MB pandas shape has no
-    # union branch (2 scans) and exactly one MapInPandas per alias.
-    assert _scans(D.ngram_jaccard_pairs(docs), "documents.parquet") == 4
-    sh_pd = D.shingle_rows(docs, impl="pandas")
-    assert _scans(sh_pd, "documents.parquet") == 1
-    assert "MapInPandas" in _plan(sh_pd)
+    # shingle_rows is one Arrow stage with no short-doc union branch:
+    # 1 scan per self-join alias.
+    assert _scans(D.ngram_jaccard_pairs(docs), "documents.parquet") == 2
+    sh = D.shingle_rows(docs)
+    assert _scans(sh, "documents.parquet") == 1
+    assert "MapInPandas" in _plan(sh)
     # round 6: the fat-bucket path fuses candidate enumeration and the
     # exact-fold-order numpy verify into ONE grouped pass — vectors ride
     # the band fan-out, so the two vector join-backs are gone: 1 scan.
