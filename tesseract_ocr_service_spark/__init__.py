@@ -8,10 +8,13 @@ over an Iceberg-style table of Common-Crawl-like pages
 
 Architecture (Spark-first, not a port):
 
-- All heavy lifting happens inside ONE fused ``mapInPandas`` kernel
+- All heavy lifting happens inside ONE fused ``mapInArrow`` kernel
   (`operators.extract`), crossing the JVM<->Python Arrow boundary once per
   batch — where the reference crosses a process boundary 5x per document
   (reference ``ocr/services/ocr_processor.py:400-457``).
+- Importing the package installs lazy zip-directory invalidation
+  (`_zipcache`), so a reused Python worker does not re-read pyspark.zip
+  at the start of every task.
 - Everything relational (validation predicates, partition pruning, column
   pruning, salting, lineage aggregation, dedup, similarity) is declarative
   DataFrame API so Catalyst/AQE optimize it.
@@ -20,5 +23,9 @@ Architecture (Spark-first, not a port):
   (``ocr/services/coordinates_store.py:8-24``), which here becomes the
   persisted ``spans`` output table keyed by ``url``.
 """
+
+from . import _zipcache
+
+_zipcache.install()
 
 __version__ = "0.1.0"

@@ -30,7 +30,7 @@ def pages_from_documents(docs: DataFrame) -> DataFrame:
     doc_id so results join back losslessly.
     """
     # The driver's documents table is ONE parquet file -> one scan
-    # partition -> the kernel's mapInPandas ran in a SINGLE task
+    # partition -> the kernel's mapInArrow ran in a SINGLE task
     # (measured: the whole extraction pipeline serialized on one core
     # at sf1.0). Spread the rows across the cluster with a
     # deterministic hash repartition (guide §2.5: never rand/round-

@@ -5,7 +5,7 @@ Plan shape (SURVEY.md §3.1 "Spark translation") — one shuffle-free pass:
     scan pages (PartitionFilters on warc_day, ReadSchema w/o `text`)
       -> native validation predicates (status routing stays relational)
       -> optional salted repartition (domain-skewed payload sizes)
-      -> mapInPandas(extract_kernel)  # ONE Arrow stage = split..OCR..spans
+      -> mapInArrow(extract_kernel)   # ONE Arrow stage = split..OCR..spans
       -> project extracted / spans / lineage
 
 Scale design notes (100 TB / 1000 executors):
@@ -28,6 +28,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import ALLOWED_CONTENT_TYPES, ExtractConfig
 from ..functions.kernel import kernel_iter
@@ -36,6 +37,9 @@ from ..schema import EXTRACTED_SCHEMA
 #: columns the kernel needs — `text` (the raw noise column) is never read,
 #: so parquet column pruning skips it (verify: ReadSchema in explain()).
 KERNEL_INPUT = ("url", "warc_ts", "html", "lang")
+
+#: the kernel's output batches are built against this Arrow schema
+_KERNEL_ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
 
 
 def content_type_ok(ct, allowed: tuple[str, ...] = ALLOWED_CONTENT_TYPES):
@@ -176,8 +180,13 @@ def extract(
         # explicit skew control: uniform hash of the unique key ->
         # near-perfectly even partitions regardless of domain skew.
         df = df.repartition(salt_partitions, F.xxhash64("url"))
-    return df.mapInPandas(
-        functools.partial(kernel_iter, cfg=cfg, day_acc=day_timer_acc),
+    return df.mapInArrow(
+        functools.partial(
+            kernel_iter,
+            cfg=cfg,
+            schema=_KERNEL_ARROW_SCHEMA,
+            day_acc=day_timer_acc,
+        ),
         schema=EXTRACTED_SCHEMA,
     )
 

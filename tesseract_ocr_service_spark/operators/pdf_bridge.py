@@ -123,10 +123,11 @@ def pdf_pages_from_documents(docs: DataFrame) -> DataFrame:
 
     The deterministic hash repartition mirrors bridge.pages_from_
     documents: the single-file documents table otherwise funnels the
-    builder AND the downstream kernel into ONE task (both mapInPandas
-    stages chain inside the same stage), serializing the whole pdf
-    path on one core — measured 6.5 s builder / 33 s spans pipeline at
-    sf1.0 before, against ~0.6 s of actual parallel python work."""
+    builder AND the downstream kernel into ONE task (the builder's
+    mapInPandas and the kernel's mapInArrow chain inside the same
+    stage), serializing the whole pdf path on one core — measured 6.5 s
+    builder / 33 s spans pipeline at sf1.0 before, against ~0.6 s of
+    actual parallel python work."""
     par = docs.sparkSession.sparkContext.defaultParallelism
     return (
         docs.select("doc_id", "text")

@@ -78,3 +78,4 @@ def test_probe_plan_is_scan_only(spark, pages_path):
         .toString()
     )
     assert "MapInPandas" not in plan and "Exchange" not in plan
+    assert "MapInArrow" not in plan  # the extraction kernel never runs
