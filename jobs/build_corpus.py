@@ -124,7 +124,7 @@ def build(spark, args) -> dict:
     from tesseract_ocr_service_spark.functions import textstats as T
     from tesseract_ocr_service_spark.operators import dedup as D
     from tesseract_ocr_service_spark.operators import dsir as DS
-    from tesseract_ocr_service_spark.operators.dedup import _truncate_lineage
+    from tesseract_ocr_service_spark.operators.sizing import truncate_lineage
 
     path = args.docs
     if os.path.isdir(path) and os.path.exists(
@@ -141,7 +141,7 @@ def build(spark, args) -> dict:
             if args.quality_gate == "gopher"
             else T.quality_keep
         )
-        docs = _truncate_lineage(
+        docs = truncate_lineage(
             docs.where(gate(F.col(text_c)).cast("boolean"))
         )
         funnel["quality_kept"] = docs.count()
@@ -151,22 +151,22 @@ def build(spark, args) -> dict:
             # exact dups are textually identical (any keeper is fine);
             # near-dup clusters keep their LONGEST member instead of
             # the min id — the quality-aware retention rule.
-            ex = _truncate_lineage(D.dedup_exact(docs, id_c, text_c))
+            ex = truncate_lineage(D.dedup_exact(docs, id_c, text_c))
             kept = D.keep_best_per_component(ex, id_c, text_c)
-            docs = _truncate_lineage(
+            docs = truncate_lineage(
                 docs.join(
                     kept.select(F.col("doc_id").alias(id_c)), id_c
                 )
             )
         else:
-            docs = _truncate_lineage(D.dedup_corpus(docs, id_c, text_c))
+            docs = truncate_lineage(D.dedup_corpus(docs, id_c, text_c))
         funnel["dedup_kept"] = docs.count()
 
     if not args.no_perplexity:
         verdict = DS.perplexity_filter(
             docs, id_c, text_c, keep_frac=args.ppl_keep
         ).where("keep = 1").select(id_c)
-        docs = _truncate_lineage(docs.join(verdict, id_c))
+        docs = truncate_lineage(docs.join(verdict, id_c))
         funnel["perplexity_kept"] = docs.count()
 
     if args.target_lang is not None:
@@ -177,7 +177,7 @@ def build(spark, args) -> dict:
             text_col=text_c,
             keep_frac=args.dsir_keep,
         ).where("keep = 1").select(id_c)
-        docs = _truncate_lineage(docs.join(verdict, id_c))
+        docs = truncate_lineage(docs.join(verdict, id_c))
         funnel["dsir_kept"] = docs.count()
 
     if args.temperature_sample:
@@ -195,7 +195,7 @@ def build(spark, args) -> dict:
                 F.col("_n_min").cast("double") / F.col("_n").cast("double")
             )
         )
-        docs = _truncate_lineage(
+        docs = truncate_lineage(
             docs.join(F.broadcast(counts), args.lang_col)
             .crossJoin(F.broadcast(n_min))
             .where(bucket < thresh)

@@ -34,42 +34,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textstats as T
+from . import sizing
 
 log = logging.getLogger(__name__)
-
-
-#: row cap for broadcasting checkpointed/statless small frames (~tens
-#: of MB hashed at 2 longs/row — comfortably inside any executor).
-_BCAST_ROWS_CAP = 1_000_000
-
-
-def _bcast_if_small(df: DataFrame, rows: int | None) -> DataFrame:
-    """Broadcast hint for a checkpointed (LogicalRDD) frame with a
-    KNOWN small row count. Checkpointed frames carry no stats (the
-    Long.MaxValue default), so neither the static planner nor AQE ever
-    broadcasts them — a 1k-row labels/losers table then forces a full
-    shuffle + sort of the corpus-sized side of its join (observed:
-    SortMergeJoin of 50k vertices against 1.1k checkpointed labels).
-    ``rows`` must be an ALREADY-KNOWN count (the caller materialized
-    the frame — counting here would add an eager consumer); None keeps
-    the shuffled join (the scale-safe default)."""
-    if rows is not None and rows <= _BCAST_ROWS_CAP:
-        return F.broadcast(df)
-    return df
-
-
-def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Cut an iterative plan's lineage. If the session has a RELIABLE
-    checkpoint dir configured (``spark.sparkContext.setCheckpointDir``)
-    use ``.checkpoint()`` — blocks live in fault-tolerant storage, so a
-    lost executor mid-iteration recovers instead of killing the job.
-    Otherwise fall back to ``localCheckpoint`` (executor-local blocks:
-    fine on local[n]/tests, NOT for thousand-executor clusters — set a
-    checkpoint dir there)."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
 
 
 def cap_buckets(
@@ -244,12 +211,9 @@ def shingle_rows(
                 outs.extend(sh)
             yield pd.DataFrame({"id": ids, "shingle": outs})
 
-    # one wave of maximal tasks (shuffle-free; no-op when the input is
-    # not over-spread) — Arrow stages carry fixed per-task setup, and a
-    # second wave measured 0.2-0.35 s slower per stage at the 50k tier
-    # (same rule as the signature stage)
-    base = base.coalesce(df.sparkSession.sparkContext.defaultParallelism)
-    return base.mapInPandas(_build, schema=f"id {id_ddl}, shingle string")
+    return sizing.one_wave(base).mapInPandas(
+        _build, schema=f"id {id_ddl}, shingle string"
+    )
 
 
 def _jaccard_pairs_blocked(
@@ -404,8 +368,6 @@ def ngram_jaccard_pairs(
     if hot_shingle_cap is None:
         import math
 
-        from .queries import _input_bytes
-
         par = df.sparkSession.sparkContext.defaultParallelism
         # replication bytes scale with B (every doc ships to B tasks),
         # so the SMALLEST B that still fills the cluster wins: ~1.5-2
@@ -419,7 +381,7 @@ def ngram_jaccard_pairs(
         # while the task count absorbs the quadratic total.
         B = max(
             math.ceil(math.sqrt(3 * par)),
-            math.ceil(_input_bytes(df) / (16 * 1024 * 1024)),
+            math.ceil(sizing.input_bytes(df) / (16 * 1024 * 1024)),
         )
         B = min(B, 256)
         toks = df.select(
@@ -753,19 +715,7 @@ def minhash_signatures_agg(
             "_nt"
         ),
     )
-    # ONE wave of maximal tasks: per-task cost has a fixed
-    # memo-rebuild component (every task re-hashes the distinct
-    # shingles IT sees — 16 md5s each), so 2x-parallelism spread
-    # inputs pay ~2x the redundant hashing plus a second wave.
-    # coalesce is shuffle-free (merges the spread partitions),
-    # scale-adaptive via defaultParallelism, and a no-op when the
-    # input already has that many partitions or fewer (NEVER probe
-    # .rdd.getNumPartitions() here — materializing the RDD of an
-    # AQE plan executes its upstream stages eagerly). Measured
-    # 1.68 s -> 1.20 s for the signature stage at the 50k-doc tier.
-    base = base.coalesce(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
+    base = sizing.one_wave(base)
     carry_ddl = ", ".join(
         f"{name} {base.schema[name].dataType.simpleString()}"
         for name in carry
@@ -966,7 +916,7 @@ def minhash_dedup_pairs(
     with_sig = (
         sigs
         if sigs is not None
-        else _truncate_lineage(
+        else sizing.truncate_lineage(
             minhash_signatures_agg(df, id_col, text_col, k, n)
         )
     )
@@ -1074,10 +1024,7 @@ def simhash_rolling_table(
             out["rolling_fp"] = fps
             yield out
 
-    base = base.coalesce(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return base.mapInPandas(
+    return sizing.one_wave(base).mapInPandas(
         _both, schema=f"id {id_ddl}, sh bigint, rolling_fp string"
     )
 
@@ -1437,7 +1384,7 @@ def _label_prop_labels(
     # not a union of two selects: the union form consumes the (often
     # expensive — LSH banding + verify) edge plan twice, and Catalyst
     # will not reuse the exchange across the branches (CLAUDE.md rule).
-    sym = _truncate_lineage(
+    sym = sizing.truncate_lineage(
         edges.select(
             F.explode(
                 F.array(
@@ -1461,7 +1408,7 @@ def _label_prop_labels(
     # min-of-neighbor-labels IS min-of-neighbor-ids, so the seed
     # label = least(id, min neighbor id) — one groupBy instead of the
     # first join round.
-    labels = _truncate_lineage(
+    labels = sizing.truncate_lineage(
         sym.groupBy(F.col("s").alias("id"))
         .agg(F.min("d").alias("_m"))
         .select("id", F.least("id", "_m").alias("label"))
@@ -1472,12 +1419,12 @@ def _label_prop_labels(
     # then broadcast through every round's join AND the final
     # vertices join instead of forcing shuffle+sort of the big sides.
     n_endpoints = labels.count()
-    small = n_endpoints <= _BCAST_ROWS_CAP
+    small = sizing.fits_broadcast(labels, n_endpoints)
     changed = -1
     for _ in range(max_iter):
         neighbor_min = (
             sym.join(
-                _bcast_if_small(labels, n_endpoints),
+                sizing.broadcast_if_small(labels, n_endpoints),
                 sym["d"] == labels["id"],
             )
             .groupBy("s")
@@ -1493,7 +1440,7 @@ def _label_prop_labels(
             # never evaluates twice.
             changed = (
                 labels.join(
-                    _bcast_if_small(neighbor_min, n_endpoints),
+                    sizing.broadcast_if_small(neighbor_min, n_endpoints),
                     labels["id"] == neighbor_min["s"],
                 )
                 .where(F.col("nlabel") < F.col("label"))
@@ -1501,9 +1448,9 @@ def _label_prop_labels(
             )
             if changed == 0:
                 break
-            labels = _truncate_lineage(
+            labels = sizing.truncate_lineage(
                 labels.join(
-                    _bcast_if_small(neighbor_min, n_endpoints),
+                    sizing.broadcast_if_small(neighbor_min, n_endpoints),
                     labels["id"] == neighbor_min["s"],
                     "left",
                 ).select(
@@ -1519,9 +1466,9 @@ def _label_prop_labels(
         # probe is then one filter+count scan of the checkpoint instead
         # of a join of the new labels back onto the old — that join
         # shuffled both full label sets once more per round.
-        new_labels = _truncate_lineage(
+        new_labels = sizing.truncate_lineage(
             labels.join(
-                _bcast_if_small(neighbor_min, n_endpoints),
+                sizing.broadcast_if_small(neighbor_min, n_endpoints),
                 labels["id"] == neighbor_min["s"],
                 "left",
             )
@@ -1576,7 +1523,7 @@ def _attach_labels(
     return (
         vertices.select(F.col(id_col).alias("id"))
         .join(
-            _bcast_if_small(
+            sizing.broadcast_if_small(
                 labels.withColumnRenamed("label", "_lb"), n_bound
             ),
             "id",
@@ -1612,7 +1559,7 @@ def _large_star(e: DataFrame, n_bound: int | None = None) -> DataFrame:
     # m = min(Γ⁺(u)) = least(u, min over neighbors)
     mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
     if n_bound is not None:
-        mins = _bcast_if_small(mins, 2 * n_bound)
+        mins = sizing.broadcast_if_small(mins, 2 * n_bound)
     return (
         sym.join(mins, "u")
         .where(F.col("v") > F.col("u"))
@@ -1632,7 +1579,7 @@ def _small_star(e: DataFrame, n_bound: int | None = None) -> DataFrame:
     # e is already oriented big → small: neighbors of u are {b : (u,b)}
     mins = e.groupBy("a").agg(F.min("b").alias("m"))
     if n_bound is not None:
-        mins = _bcast_if_small(mins, 2 * n_bound)
+        mins = sizing.broadcast_if_small(mins, 2 * n_bound)
     rewired = (
         e.join(mins, "a")
         .where(F.col("b") != F.col("m"))
@@ -1668,7 +1615,7 @@ def _star_labels(
     full large+small cycle, checked with one count + order-insensitive
     xxhash64 checksum aggregate (no driver-side edge collection).
     """
-    e = _truncate_lineage(_canonical_edges(edges, src_col, dst_col))
+    e = sizing.truncate_lineage(_canonical_edges(edges, src_col, dst_col))
 
     def _sig(df: DataFrame) -> tuple[int, int]:
         # count + order-insensitive XOR of row hashes (bit_xor cannot
@@ -1684,7 +1631,7 @@ def _star_labels(
     sig = _sig(e)
     converged = False
     for _ in range(max_iter):
-        e = _truncate_lineage(
+        e = sizing.truncate_lineage(
             _small_star(_large_star(e, sig[0]), sig[0])
         )
         new_sig = _sig(e)
@@ -1838,7 +1785,7 @@ def keep_best_per_component(
     scored = df.select(
         F.col(id_col).alias("doc_id"), score.alias("score")
     ).join(
-        _bcast_if_small(
+        sizing.broadcast_if_small(
             labels.withColumnRenamed("id", "doc_id").withColumnRenamed(
                 "label", "_lb"
             ),

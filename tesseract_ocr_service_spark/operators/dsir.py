@@ -60,6 +60,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textstats as T
+from . import sizing
 
 
 def _bucket(gram: Column, n_buckets: int, hash_mode: str) -> Column:
@@ -85,7 +86,6 @@ def hashed_gram_counts(
     n_buckets: int = 256,
     hash_mode: str = "xxhash64",
     carry: list[str] | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """Bag-of-hashed-grams per document: (id, [carry...], bucket, cnt)
     where grams are every unigram AND every adjacent bigram of the
@@ -100,31 +100,24 @@ def hashed_gram_counts(
     prefix of the grouping key), so tokenize -> counts is a single
     shuffle.
 
-    r6 fast path (md5 mode, source >= 4 MB): the gram build, bucket
-    hash and per-doc count all fold into ONE Arrow stage —
-    tokenization stays a JVM expression; each task hashes every
-    distinct gram it sees once (size-capped memo; hashlib.md5 hex ==
-    Spark md5 over the same UTF-8 bytes, and the first-8-hex-chars
-    conv/% arithmetic is replicated exactly) and emits the finished
-    (id, bucket, cnt) rows. Removes the token-stream window
-    exchange+sort, the per-INSTANCE md5 calls and the count shuffle.
+    r6 fast path (md5 mode, source >= ``sizing.SMALL_INPUT_BYTES``):
+    the gram build, bucket hash and per-doc count all fold into ONE
+    Arrow stage — tokenization stays a JVM expression; each task
+    hashes every distinct gram it sees once (size-capped memo;
+    hashlib.md5 hex == Spark md5 over the same UTF-8 bytes, and the
+    first-8-hex-chars conv/% arithmetic is replicated exactly) and
+    emits the finished (id, bucket, cnt) rows. Removes the token-stream
+    window exchange+sort, the per-INSTANCE md5 calls and the count
+    shuffle.
     xxhash64 mode has no Python twin, so the production path keeps the
     pure-plan shape."""
     carry = carry or []
     norm = T.normalized(F.coalesce(F.col(text_col), F.lit("")))
     toks = T.tokens(norm)
-    if impl == "auto":
-        from .queries import _input_bytes
-
-        impl = (
-            "pandas"
-            if hash_mode == "md5"
-            and _input_bytes(df) >= 4 * 1024 * 1024
-            else "window"
-        )
-    if impl == "pandas":
-        if hash_mode != "md5":
-            raise ValueError("pandas impl requires hash_mode='md5'")
+    if (
+        hash_mode == "md5"
+        and sizing.input_bytes(df) >= sizing.SMALL_INPUT_BYTES
+    ):
         id_ddl = df.schema[id_col].dataType.simpleString()
         carry_ddl = "".join(
             f", {c} {df.schema[c].dataType.simpleString()}"
@@ -192,13 +185,7 @@ def hashed_gram_counts(
 
                 yield pd.DataFrame(out)
 
-        # one wave of maximal tasks (same rule as the minhash
-        # signature stage: fixed per-task setup; shuffle-free no-op
-        # unless the input is over-spread)
-        base = base.coalesce(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-        return base.mapInPandas(
+        return sizing.one_wave(base).mapInPandas(
             _counts,
             schema=(
                 f"id {id_ddl}{carry_ddl}, bucket bigint, cnt bigint"
@@ -246,8 +233,6 @@ def dsir_importance(
     """
     from pyspark import StorageLevel
 
-    from .dedup import _truncate_lineage
-
     B = n_buckets
     # attach the target flag before tokenizing so it rides the one scan
     flagged = df.withColumn("is_target", target.cast("int"))
@@ -257,7 +242,7 @@ def dsir_importance(
 
     # bucket distributions: B rows, truncated so the totals probe and
     # the weight projection don't re-aggregate
-    bt = _truncate_lineage(
+    bt = sizing.truncate_lineage(
         tfb.groupBy("bucket").agg(
             F.sum("cnt").alias("raw_cnt"),
             F.sum(F.col("cnt") * F.col("is_target")).alias("tgt_cnt"),
@@ -280,7 +265,7 @@ def dsir_importance(
         F.sum(F.col("cnt") * F.col("w_micro")).alias("score_micro")
     )
     flags = flagged.select(F.col(id_col).alias("id"), "is_target")
-    scores = _truncate_lineage(
+    scores = sizing.truncate_lineage(
         flags.join(scored, "id", "left").select(
             "id",
             "is_target",
@@ -368,8 +353,6 @@ def perplexity_filter(
     exact."""
     from pyspark import StorageLevel
 
-    from .dedup import _truncate_lineage
-
     B = n_buckets
     # raw (id, b1, b2) pair rows, NOT per-doc pre-counts: measured at
     # the 50k-doc tier the bigram-bucket multiplicities are ~1, so a
@@ -378,7 +361,7 @@ def perplexity_filter(
     pairs = hashed_bigram_pairs(
         df, id_col, text_col, n_buckets, hash_mode
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    cb = _truncate_lineage(
+    cb = sizing.truncate_lineage(
         pairs.groupBy("b1", "b2").agg(F.count("*").alias("c12"))
     )
     c1 = cb.groupBy("b1").agg(F.sum("c12").alias("c1"))
@@ -400,7 +383,7 @@ def perplexity_filter(
         )
     )
     ids = df.select(F.col(id_col).alias("id"))
-    scores = _truncate_lineage(
+    scores = sizing.truncate_lineage(
         ids.join(scored, "id", "left").select(
             "id",
             F.coalesce(F.col("lp"), F.lit(0)).alias("logprob_micro"),

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..functions import textstats as T
 from . import dedup as D
+from . import sizing
 
 #: store columns (parquet, appended per increment)
 STORE_COLUMNS = ("id", "fingerprint", "sig")
@@ -203,7 +204,7 @@ def dedup_incremental(
         # whole shingle+minhash pipeline per consumer (~6x at sf1.0:
         # measured 10.9 s -> 8.1 s for the driver's two-increment
         # query).
-        ex = D._truncate_lineage(ex)
+        ex = sizing.truncate_lineage(ex)
     elif persist:
         ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
 

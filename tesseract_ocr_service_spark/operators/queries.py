@@ -17,6 +17,7 @@ from . import dedup as D
 from . import multimodal as M
 from . import pdf_bridge as P
 from . import similarity as S
+from . import sizing
 
 ANN_PLANES = 8
 ANN_DIM = 64
@@ -33,81 +34,12 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _par(df: DataFrame, key: str, mult: int = 2) -> DataFrame:
-    """Spread a SINGLE-row-group driver table across the cluster. The
-    driver's parquet tables are one file with one row group, so every
-    scan is ONE split and all per-row work before the first exchange
-    (tokenize/explode/regex/vector math) ran on ONE core — measured
-    9.1 s for gopher_filter's single-task signal stage at sf1.0 vs
-    0.9 s spread. A deterministic hash repartition (guide §2.5: never
-    rand/round-robin — retried tasks must reproduce the assignment)
-    costs one exchange of the few-MB source rows. Only the queries with
-    substantial per-row work use this; trivial projections keep the
-    exchange-free single-task plan.
-
-    SIZE-ADAPTIVE (guide §2: derive partitioning from input size, not
-    a constant): below ~4 MB of source bytes the exchange's fixed cost
-    (~0.3 s) exceeds what spreading the per-row work saves — measured
-    at sf0.1 (0.6 MB documents) where a blanket repartition cost
-    tfidf/dsir/repetition +0.3-0.8 s each while the sf1.0 (5.9 MB)
-    wins were 1.3-3x. Reading the file sizes is a driver-side listing
-    lookup, no Spark job.
-
-    ``mult``: partitions = defaultParallelism * mult. 2 (default)
-    smooths per-row-work stragglers across waves; 1 for stages whose
-    per-task cost has a substantial FIXED component (the minhash
-    Arrow stage re-hashes the distinct shingles each task sees — a
-    per-task memo rebuild), where extra waves pay that fixed cost
-    again (sig stage measured 1.68 s at 2x vs 1.20 s at 1x on the
-    50k-doc tier)."""
-    if _input_bytes(df) < 4 * 1024 * 1024:
-        return df
-    p = df.sparkSession.sparkContext.defaultParallelism * mult
-    return df.repartition(p, F.xxhash64(key))
-
-
-def _input_bytes(df: DataFrame) -> int:
-    import os
-    from urllib.parse import unquote, urlparse
-
-    files = df.inputFiles()
-    if not files:
-        # No file sources in the lineage (eagerly checkpointed or
-        # in-memory frames): inputFiles() is empty and the old
-        # behavior read as 0 bytes, silently disabling every
-        # size-gated fast path downstream of a checkpoint (observed:
-        # corpus_funnel's dedup stage fell back to the slow shapes).
-        # The optimizer's stats are REAL for eager checkpoints (the
-        # materialized size rides the LogicalRDD); frames with no
-        # stats at all (pyspark createDataFrame) report the
-        # Long.MaxValue default — keep those at 0 (the conservative
-        # never-spread behavior for tiny test frames).
-        try:
-            sz = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            return sz if sz < (1 << 60) else 0
-        except Exception:
-            return 0
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        path = unquote(u.path) if u.scheme in ("", "file") else None
-        if path is None:
-            return 1 << 60  # non-local storage: always worth spreading
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            pass
-    return total
-
-
 def _docs_par(spark: SparkSession, sf_dir: str, mult: int = 2) -> DataFrame:
-    return _par(_docs(spark, sf_dir), "doc_id", mult)
+    return sizing.spread(_docs(spark, sf_dir), "doc_id", mult)
 
 
 def _emb_par(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _par(_emb(spark, sf_dir), "vec_id")
+    return sizing.spread(_emb(spark, sf_dir), "vec_id")
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -216,7 +148,7 @@ def tfidf_top_terms(spark, sf_dir):
     # driver scalar, matches the oracle's count(*) — counted on the
     # UN-repartitioned scan (r6): count-star on a bare parquet frame is
     # answered from file metadata, while counting `docs` would pay the
-    # _par exchange once more for a number the exchange cannot change
+    # spread exchange once more for a number the exchange cannot change
     n_docs = _docs(spark, sf_dir).count()
     toks = docs.select(
         "doc_id",
@@ -238,7 +170,7 @@ def tfidf_top_terms(spark, sf_dir):
     # consumers, no ReusedExchange under AQE (CLAUDE.md rule): without
     # the truncation the explode+aggregate pipeline ran twice
     # (measured 2.1-4.5 s vs a stable 1.8-2.0 s at the 50k tier)
-    tf = D._truncate_lineage(tf)
+    tf = sizing.truncate_lineage(tf)
     dfreq = tf.groupBy("tok").agg(F.count("*").alias("dfreq"))
     scored = tf.join(dfreq, "tok").withColumn(
         "_score", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("dfreq"))
@@ -557,7 +489,7 @@ def dedup_incremental_kept(spark, sf_dir):
 
     docs = _docs_par(spark, sf_dir, mult=1)
     # the split point is data-determined; answer it from the BARE scan
-    # (single-file aggregate, no _par exchange replay — the repartition
+    # (single-file aggregate, no spread exchange replay — the repartition
     # cannot change max(doc_id))
     mid = _docs(spark, sf_dir).agg(F.max("doc_id")).collect()[0][0] // 2
     k1, s1 = I.dedup_incremental(
@@ -1831,7 +1763,7 @@ def corpus_funnel(spark, sf_dir):
     # is unchanged (the kernel is ~1.2 s of a 7 s funnel and the
     # checkpoint write costs about what one replay saves); at real
     # scale the kernel dominates and must run ONCE.
-    gated = D._truncate_lineage(gated)
+    gated = sizing.truncate_lineage(gated)
     kept = D.dedup_corpus(gated, threshold=0.7)
     planted = F.concat_ws(
         " ",

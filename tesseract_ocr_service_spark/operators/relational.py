@@ -13,21 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import sizing
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _t_par(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Deterministically spread a single-row-group driver table before
-    per-row-heavy work: the driver's parquet tables are ONE file with
-    ONE row group, so every scan is one split and everything before the
-    first exchange (tokenize/explode/regex) ran on ONE core. Same
-    rationale and shape as queries._par (guide §2.5: hash of the key,
-    never rand/round-robin)."""
-    from .queries import _par
-
-    return _par(_t(spark, sf_dir, name), key)
 
 
 # --- A1 (relational form): canonical assembly over a synthesized word
@@ -38,7 +28,7 @@ def _t_par(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
 # cascaded groupBy + sort_array (O2: explicit sorts, never rely on
 # collect_list order).
 def assembly_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t_par(spark, sf_dir, "documents", "doc_id")
+    docs = sizing.spread(_t(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select(
         "doc_id", F.posexplode(F.split("text", r"\s+")).alias("pos", "tok")
     ).where(F.col("tok") != "")
@@ -146,7 +136,7 @@ def sorted_order_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- F1: empty-word filter (ocr_processor.py:137-138).
 def nonempty_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t_par(spark, sf_dir, "documents", "doc_id")
+    docs = sizing.spread(_t(spark, sf_dir, "documents"), "doc_id")
     return docs.select(
         "doc_id",
         F.size(F.filter(F.split("text", r"\s+"), lambda x: x != ""))
@@ -301,7 +291,7 @@ def top_tokens(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
 # --- training-data op: per-language corpus stats (the slice-and-count
 # every multilingual pipeline reports).
 def lang_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t_par(spark, sf_dir, "documents", "doc_id")
+    docs = sizing.spread(_t(spark, sf_dir, "documents"), "doc_id")
     n_tok = F.size(F.filter(F.split("text", r"\s+"), lambda x: x != ""))
     return docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),

@@ -21,6 +21,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import sizing
+
 
 def dot(a, b) -> Column:
     return F.aggregate(
@@ -494,8 +496,8 @@ def semantic_dedup(
     thousands) so within-cluster pairs stay tractable, which is
     exactly the hot-shingle-cap story with the codebook as the cap.
     Norms are precomputed once per row, pairs carry ids only. On a
-    cluster, set a reliable checkpoint dir (same rule as
-    dedup.connected_components).
+    cluster, set a reliable checkpoint dir (``sizing.truncate_lineage``
+    uses it).
 
     ``assign``: 'expr' = unrolled JVM cosine argmax (the oracle path,
     plan size grows with K*dim); 'batched' = Arrow-batch numpy matmul
@@ -512,7 +514,7 @@ def semantic_dedup(
     in the output with keep=1 (visible via
     ``semantic_dedup_cap_stats``; no silent row loss). None disables.
     """
-    from .dedup import _truncate_lineage, cap_buckets
+    from .dedup import cap_buckets
 
     assign = _resolve_assign(assign, len(centroids))
     v = F.col(vec_col).cast("array<double>")
@@ -525,7 +527,7 @@ def semantic_dedup(
             ivf_assign(vec_col, centroids).alias("list_id"),
             norm(v).alias("nrm"),
         )
-    assigned = _truncate_lineage(raw)
+    assigned = sizing.truncate_lineage(raw)
     if max_cluster is not None:
         # Capped clusters (the default / declared-query path): the
         # within-cluster pair verify runs as ONE Arrow group per

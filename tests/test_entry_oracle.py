@@ -66,11 +66,30 @@ def test_query_matches_duckdb_oracle(spark, ddb, name):
     if sql is None:
         assert len(got) >= 0  # rows-only check (non-SQL-expressible op)
         return
+    _assert_matches(ddb, name, got, sql)
+
+
+def _assert_matches(ddb, name: str, got: pd.DataFrame, sql: str) -> None:
     exp = ddb.execute(sql).df()
     assert len(got) == len(exp), f"{name}: row count {len(got)} != {len(exp)}"
     assert sorted(got.columns) == sorted(exp.columns), name
     g, e = _canon(got), _canon(exp)
     pd.testing.assert_frame_equal(g, e, check_dtype=False, obj=name)
+
+
+@pytest.mark.parametrize(
+    "name", ["dsir_select", "gopher_filter", "dedup_ngram_jaccard"]
+)
+def test_large_regime_matches_duckdb_oracle(spark, ddb, monkeypatch, name):
+    """The size gates' large side at sf0.001: with
+    ``sizing.SMALL_INPUT_BYTES`` at 0 every gate takes its large side
+    (sources spread, dsir grams counted by the Arrow builder), and the
+    answer must still equal the oracle's."""
+    from tesseract_ocr_service_spark.operators import sizing
+
+    monkeypatch.setattr(sizing, "SMALL_INPUT_BYTES", 0)
+    got = entrymod.queries()[name](spark, SF_DIR).toPandas()
+    _assert_matches(ddb, name, got, entrymod.oracle_sql()[name])
 
 
 def test_entry_smoke(spark):

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from tesseract_ocr_service_spark.operators import dedup as D
 from tesseract_ocr_service_spark.operators import extract as X
 from tesseract_ocr_service_spark.operators import similarity as S
+from tesseract_ocr_service_spark.operators import sizing
 from tesseract_ocr_service_spark.plans import commit as C
 from tesseract_ocr_service_spark.sources import gen
 
@@ -180,8 +181,8 @@ def test_label_propagation_max_iter_boundary(spark, monkeypatch, regime):
     branch probes before its update, the shuffle branch after it — both
     must raise at max_iter=4 and return all-1 labels at max_iter=5."""
     if regime == "shuffle":
-        # no endpoint count fits under the cap: the at-scale branch
-        monkeypatch.setattr(D, "_BCAST_ROWS_CAP", -1)
+        # no endpoint table fits under the byte cap: the at-scale branch
+        monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", -1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "src long, dst long"
     )

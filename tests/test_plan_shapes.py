@@ -6,6 +6,7 @@ import pytest
 
 from tesseract_ocr_service_spark.operators import extract as X
 from tesseract_ocr_service_spark.operators import relational as R
+from tesseract_ocr_service_spark.operators import sizing
 from tesseract_ocr_service_spark.sources import gen
 
 
@@ -274,7 +275,7 @@ def test_gopher_filter_is_jvm_only_single_scan(spark):
     plan = _plan(Q.gopher_filter(spark, "/root/testdata/sf0.001"))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert plan.count("Scan parquet") == 1, plan
-    # round 6: queries._par is SIZE-ADAPTIVE — below 4MB of source the
+    # round 6: sizing.spread is SIZE-ADAPTIVE — below 4MB of source the
     # plan stays the exchange-free single-task projection (sf0.001
     # here); at sf1.0 the same query gets exactly one deterministic
     # REPARTITION_BY_NUM spread (9.1 s -> 0.8 s measured). Pin the
@@ -283,26 +284,76 @@ def test_gopher_filter_is_jvm_only_single_scan(spark):
 
 
 def test_par_threshold_spreads_only_big_sources(spark):
-    """queries._par pins the size-adaptive rule: a tiny source keeps
+    """sizing.spread pins the size-adaptive rule: a tiny source keeps
     its plan (no exchange), a >=4MB source gets the deterministic
     hash repartition — verified against the real sf dirs."""
-    from tesseract_ocr_service_spark.operators import queries as Q
-
     small = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    assert "Exchange" not in _plan(Q._par(small, "doc_id"))
-    assert 0 < Q._input_bytes(small) < 4 * 1024 * 1024
+    assert "Exchange" not in _plan(sizing.spread(small, "doc_id"))
+    assert 0 < sizing.input_bytes(small) < 4 * 1024 * 1024
     # frames with no file sources use the optimizer's stats (r6: real
     # for eager checkpoints — a 0-byte read would silently disable
     # every size gate downstream of a checkpoint); stat-less in-memory
     # frames (pyspark createDataFrame reports the Long.MaxValue
     # default) stay at 0 and are never spread
     tiny = spark.createDataFrame([(1,)], ["doc_id"])
-    assert Q._input_bytes(tiny) == 0
-    assert "Exchange" not in _plan(Q._par(tiny, "doc_id"))
+    assert sizing.input_bytes(tiny) == 0
+    assert "Exchange" not in _plan(sizing.spread(tiny, "doc_id"))
     big_ckpt = spark.read.parquet(
         "/root/testdata/sf0.1/documents.parquet"
     ).localCheckpoint(eager=True)
-    assert Q._input_bytes(big_ckpt) > 0
+    assert sizing.input_bytes(big_ckpt) > 0
+
+
+def test_input_bytes_is_the_leaf_stats_rule(spark, tmp_path):
+    """sizing.input_bytes sums the plan leaves' sizeInBytes: a file read
+    reports its files' listed lengths, a partition filter does not
+    shrink it, and an eager checkpoint reports its materialized size
+    (a projection above it does not shrink that either)."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    def listed(df):
+        return sum(
+            os.path.getsize(unquote(urlparse(f).path))
+            for f in df.inputFiles()
+        )
+
+    one = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    assert sizing.input_bytes(one) == listed(one) > 0
+    assert sizing.input_bytes(one.withColumn("x", one["doc_id"])) == listed(
+        one
+    )
+
+    path = str(tmp_path / "by_lang")
+    one.write.partitionBy("lang").parquet(path)
+    table = spark.read.parquet(path)
+    assert sizing.input_bytes(table) == listed(table) > 0
+    assert sizing.input_bytes(table.where("lang = 'en'")) == listed(table)
+
+    ckpt = one.localCheckpoint(eager=True)
+    assert sizing.input_bytes(ckpt) > 0
+    assert sizing.input_bytes(ckpt.select("doc_id")) == sizing.input_bytes(
+        ckpt
+    )
+
+
+@pytest.mark.parametrize(
+    ("ddl", "rows", "hinted"),
+    [
+        ("a string, b string", 500_000, False),  # 40 B/row: 20 MB
+        ("a long, b long", 1_000_000, True),  # 16 B/row: the cap exactly
+        ("a long, b long", 1_000_001, False),
+    ],
+)
+def test_broadcast_hint_is_bounded_by_bytes(spark, ddl, rows, hinted):
+    """broadcast_if_small hints only when rows x the schema's default
+    row size fits BROADCAST_MAX_BYTES, so a wide key cannot slip a
+    large table under a row cap."""
+    df = spark.createDataFrame([], ddl)
+    out = sizing.broadcast_if_small(df, rows)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert ("strategy=broadcast" in analyzed) is hinted
+    assert sizing.fits_broadcast(df, rows) is hinted
 
 
 def test_compaction_plan_table_join_is_broadcast(spark, tmp_path):

@@ -233,13 +233,16 @@ def test_minhash_signatures_match_oracle(spark):
     assert {i: _md5(s) for i, s in got.items()} == exp and len(exp) == 305
 
 
-def test_hashed_gram_impls_equal(spark):
-    """The Arrow gram builder (r6) must emit the identical
-    (id, bucket, cnt) table as the window shape, including
-    single-token, empty and NULL docs."""
+def test_hashed_gram_impls_equal(spark, monkeypatch):
+    """Both sides of the dsir gram gate emit the identical
+    (id, bucket, cnt) table: the window shape below
+    ``sizing.SMALL_INPUT_BYTES`` and the Arrow gram builder (r6) at or
+    above it, including single-token, Cyrillic, CJK, empty and NULL
+    docs."""
     import random
 
     from tesseract_ocr_service_spark.operators import dsir as DS
+    from tesseract_ocr_service_spark.operators import sizing
 
     rnd = random.Random(13)
     vocab = "a bb ccc Привет 中文 café".split()
@@ -250,12 +253,16 @@ def test_hashed_gram_impls_equal(spark):
     rows += [(200, ""), (201, None), (202, "solo")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def fp(out):
-        return sorted(map(tuple, out.collect()))
+    def run():
+        out = DS.hashed_gram_counts(df, n_buckets=64, hash_mode="md5")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return sorted(map(tuple, out.collect())), "MapInPandas" in plan
 
-    g_win = fp(DS.hashed_gram_counts(df, n_buckets=64, hash_mode="md5", impl="window"))
-    g_pnd = fp(DS.hashed_gram_counts(df, n_buckets=64, hash_mode="md5", impl="pandas"))
-    assert g_pnd == g_win and len(g_win) > 0
+    g_small, arrow_small = run()
+    monkeypatch.setattr(sizing, "SMALL_INPUT_BYTES", 0)
+    g_large, arrow_large = run()
+    assert not arrow_small and arrow_large
+    assert g_large == g_small and len(g_small) > 0
 
 
 def test_minhash_pairs_finds_near_dups(docs):
