@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import textstats as T
+from ..schema import local_frame
 from . import dedup as D
 from . import multimodal as M
 from . import pdf_bridge as P
@@ -555,8 +556,8 @@ def neardup_cluster_sizes(spark, sf_dir):
     )
     n_singletons = n_docs - n_endpoints
     if n_singletons > 0:
-        single = spark.createDataFrame(
-            [(1, n_singletons)], "cluster_size bigint, n_clusters bigint"
+        single = local_frame(
+            spark, [(1, n_singletons)], "cluster_size bigint, n_clusters bigint"
         )
         hist = hist.unionByName(single)
     return hist
@@ -1478,8 +1479,8 @@ def url_host_filter(spark, sf_dir):
     urls = docs.select(
         "doc_id", raw.alias("url"), T.url_host(raw).alias("host")
     )
-    bl = spark.createDataFrame(
-        [(h,) for h in URL_BLOCKLIST], "host string"
+    bl = local_frame(
+        spark, [(h,) for h in URL_BLOCKLIST], "host string"
     ).withColumn("blocked", F.lit(1))
     j = urls.join(F.broadcast(bl), "host", "left")
     rest = F.regexp_extract("url", T.URL_REST_RE, 1)

@@ -21,7 +21,11 @@ rule, with plain parquet — no Iceberg jars offline):
 3. Append per-day counter rows to ``lineage/`` LAST. A crash between
    (2) and (3) leaves the day un-committed -> step 1 reprocesses it ->
    overwrite makes the retry idempotent. Bytes in committed partitions
-   are never rewritten, so re-runs are also byte-stable.
+   are never rewritten, so re-runs are also byte-stable. The counters
+   come from one aggregate over the written files, collected (one row
+   per pending day); the markers are built on the driver and appended
+   as one driver-local frame, one file per run. ``attempt`` is 1 by
+   construction: only days absent from the lineage table are marked.
 
 Output layout (one wide columnar table — parquet column pruning means
 text-only readers never touch the fat ``spans`` pages):
@@ -35,14 +39,22 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import ExtractConfig
 from ..operators import extract as X
+from ..schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA, local_frame
 
+#: the written table as step 3 reads it back (warc_day is the partition)
+_EXTRACTED_WITH_DAY = StructType(
+    list(EXTRACTED_SCHEMA.fields) + [StructField("warc_day", StringType(), True)]
+)
 
-from pyspark.accumulators import AccumulatorParam
+#: the lineage counters ``X.lineage_view`` aggregates, in table order
+_COUNTERS = LINEAGE_SCHEMA.names[1 : LINEAGE_SCHEMA.names.index("kernel_ms")]
 
 
 class _DayMsParam(AccumulatorParam):
@@ -74,22 +86,6 @@ def committed_days(spark: SparkSession, out_root: str) -> set[str]:
         r["warc_day"]
         for r in spark.read.parquet(path).select("warc_day").distinct().collect()
     }
-
-
-def attempt_numbers(spark: SparkSession, out_root: str) -> dict[str, int]:
-    """Driver-side {day: max attempt} — an introspection convenience;
-    run_checkpointed itself joins against the lineage table instead
-    (a collected dict is unbounded at real day cardinality)."""
-    path = f"{out_root}/lineage"
-    if not _exists(spark, path):
-        return {}
-    rows = (
-        spark.read.parquet(path)
-        .groupBy("warc_day")
-        .agg(F.max("attempt").alias("a"))
-        .collect()
-    )
-    return {r["warc_day"]: r["a"] for r in rows}
 
 
 @dataclass
@@ -202,81 +198,47 @@ def _run_checkpointed_body(
         raise RuntimeError("injected failure between data write and commit marker")
 
     # ---- step 3: append lineage rows LAST (the commit marker) --------
-    # counters re-read from the just-written files: a cheap columnar
-    # scan of the counter columns only (spans pages never touched).
+    # counters re-read from the just-written files: one columnar scan of
+    # the counter columns (spans pages never touched), collected as
+    # O(pending days) rows — the driver already holds a list that size.
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    # explicit schema: a run whose rows were ALL filtered writes no
-    # parquet files, and schema inference on an empty dir throws.
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from ..schema import EXTRACTED_SCHEMA
-
-    ext_schema = StructType(
-        list(EXTRACTED_SCHEMA.fields)
-        + [StructField("warc_day", StringType(), True)]
-    )
+    counted = {}
     if _exists(spark, f"{out_root}/extracted"):
+        # explicit schema: a run whose rows were ALL filtered may leave
+        # a directory with no parquet files, and inference on it throws.
         written = (
-            spark.read.schema(ext_schema)
+            spark.read.schema(_EXTRACTED_WITH_DAY)
             .parquet(f"{out_root}/extracted")
             .where(F.col("warc_day").isin(pending))
         )
-    else:
-        written = spark.createDataFrame([], ext_schema)
-    # EVERY pending day gets a marker row, including days whose rows
-    # were all filtered away (0 output): without the zero-row marker a
-    # filtered-empty day stays "pending" forever and resume never
-    # converges.
-    days_df = spark.createDataFrame(
-        [(d,) for d in pending], "warc_day string"
+        counted = {r["warc_day"]: r for r in X.lineage_view(written).collect()}
+    # EVERY pending day gets a marker row, zero-filled when all its rows
+    # were filtered away: without it a filtered-empty day stays
+    # "pending" forever and resume never converges. kernel_ms comes from
+    # the accumulator the write action filled (metrics, not a contract:
+    # 0 when salting/AQE retries raced it); wall_ms is the whole run's.
+    # attempt is 1 by construction — pending days are absent from the
+    # lineage table, so no day is ever marked twice.
+    kernel_ms = day_acc.value
+    zero = dict.fromkeys(_COUNTERS, 0)
+    markers = [
+        (
+            d,
+            *[counted.get(d, zero)[c] or 0 for c in _COUNTERS],
+            int(kernel_ms.get(d, 0)),
+            wall_ms,
+            1,
+        )
+        for d in pending
+    ]
+    # one driver-local frame (LocalTableScan), one file per run
+    (
+        local_frame(spark, markers, LINEAGE_SCHEMA)
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(f"{out_root}/lineage")
     )
-    counters = X.lineage_view(written)
-    zero_filled = days_df.join(counters, "warc_day", "left").select(
-        "warc_day",
-        *[
-            F.coalesce(F.col(c), F.lit(0).cast("bigint")).alias(c)
-            for c in counters.columns
-            if c != "warc_day"
-        ],
-    )
-    # per-day kernel wall from the accumulator (filled by the write
-    # action above; empty when salting/AQE retries raced it — metrics,
-    # not a contract). kernel_ms attributes THIS day's extraction cost;
-    # wall_ms stays the whole-run wall for cross-checking overheads.
-    kern = spark.createDataFrame(
-        [(d, int(ms)) for d, ms in day_acc.value.items()] or
-        [(None, None)],
-        "warc_day string, kernel_ms bigint",
-    ).where(F.col("warc_day").isNotNull())
-    # prior attempt number via a JOIN against the lineage table — a
-    # create_map literal over all committed days grows unboundedly with
-    # run count at 10^12-scale day cardinality.
-    if _exists(spark, f"{out_root}/lineage"):
-        prev = (
-            spark.read.parquet(f"{out_root}/lineage")
-            .groupBy("warc_day")
-            .agg(F.max("attempt").alias("_prev_attempt"))
-        )
-    else:
-        prev = spark.createDataFrame(
-            [], "warc_day string, _prev_attempt int"
-        )
-    lineage = (
-        zero_filled
-        .join(kern, "warc_day", "left")
-        .join(prev, "warc_day", "left")
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn(
-            "kernel_ms",
-            F.coalesce(F.col("kernel_ms"), F.lit(0).cast("bigint")),
-        )
-        .withColumn(
-            "attempt", F.coalesce(F.col("_prev_attempt"), F.lit(0)) + 1
-        )
-        .drop("_prev_attempt")
-    )
-    lineage.write.mode("append").parquet(f"{out_root}/lineage")
-    n_docs = written.count()
+    n_docs = sum(r["n_docs"] for r in counted.values())
     return RunSummary(pending, skipped, n_docs, wall_ms)
 
 

@@ -51,6 +51,8 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import local_frame
+
 
 def _root_key(p: str) -> tuple[str, str]:
     """(scheme+authority, normalized path) for nesting comparison.
@@ -221,7 +223,7 @@ def plan_compaction(
         n_files_target=sum(r[-1] for r in rows),
     )
     schema = ", ".join([f"`{c}` string" for c in pcols] + ["k int"])
-    plan = spark.createDataFrame(rows or [(1,)], schema)
+    plan = local_frame(spark, rows or [(1,)], schema)
     return plan, layout
 
 

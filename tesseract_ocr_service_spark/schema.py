@@ -136,7 +136,11 @@ EXTRACTED_SCHEMA = StructType(
 )
 
 #: lineage table — per-partition counters (the reference logs these per
-#: request at ocr_processor.py:463-475,512-527; we persist them).
+#: request at ocr_processor.py:463-475,512-527; we persist them), one row
+#: per committed ``warc_day``: the commit marker ``plans.commit`` appends
+#: last. ``kernel_ms`` is that day's kernel wall, ``wall_ms`` the whole
+#: run's. ``attempt`` is 1 by construction: a run writes markers only
+#: for days absent from the lineage table, so no day is marked twice.
 LINEAGE_SCHEMA = StructType(
     [
         StructField("warc_day", StringType(), False),
@@ -150,7 +154,8 @@ LINEAGE_SCHEMA = StructType(
         StructField("n_blocks_dropped", LongType(), False),
         StructField("n_words", LongType(), False),
         StructField("n_chars", LongType(), False),
-        StructField("wall_ms", LongType(), False),
+        StructField("kernel_ms", LongType(), False),
+        StructField("wall_ms", IntegerType(), False),
         StructField("attempt", IntegerType(), False),
     ]
 )
@@ -175,3 +180,26 @@ WORD_RECORDS_SCHEMA = StructType(
         StructField("conf", IntegerType(), False),
     ]
 )
+
+
+# ------------------------------------------------------- driver-local rows
+
+
+def local_frame(spark, rows, schema):
+    """A DataFrame of driver-held ``rows`` (tuples in ``schema`` order;
+    ``schema`` a ``StructType`` or a DDL string) planned as a
+    ``LocalTableScan``: the rows cross to the JVM once as an Arrow
+    table. ``spark.createDataFrame(<python list>)`` would plan a
+    Python-RDD scan (``Scan ExistingRDD``) instead, which starts Python
+    workers at every use of the frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -3,10 +3,13 @@ per-partition commit, lineage, resumability)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from tesseract_ocr_service_spark.plans import commit as C
+from tesseract_ocr_service_spark.schema import LINEAGE_SCHEMA
 from tesseract_ocr_service_spark.sources import gen
 
 N_DOCS = 300
@@ -124,3 +127,44 @@ def test_lineage_counters_consistent(spark, paths):
         lin["words"],
         lin["ok"],
     )
+
+
+def _lineage_files(out):
+    return {f for f in os.listdir(f"{out}/lineage") if f.endswith(".parquet")}
+
+
+def test_one_lineage_file_per_run_in_lineage_schema(spark, paths):
+    """Each run appends its markers as one file, and LINEAGE_SCHEMA
+    describes the table as written, so any root keeps appending
+    cleanly."""
+    pages, out = paths
+    C.run_checkpointed(spark, pages, out, ts_to="2026-01-05")
+    first = _lineage_files(out)
+    assert len(first) == 1
+    C.run_checkpointed(spark, pages, out)  # resume: the other 25 days
+    files = _lineage_files(out)
+    assert len(files) == 2 and first < files
+    lineage = C.read_lineage(spark, out)
+    assert lineage.count() == 30
+    assert [(f.name, f.dataType) for f in lineage.schema] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
+
+
+def test_filtered_empty_days_get_zero_markers(spark, paths):
+    """A language filter that keeps no row still commits every pending
+    day, with all-zero counters; a rerun skips them all."""
+    pages, out = paths
+    window = dict(ts_from="2026-01-01", ts_to="2026-01-03", languages=("zz",))
+    s = C.run_checkpointed(spark, pages, out, **window)
+    assert s.n_docs == 0 and len(s.pending_days) == 3
+    rows = C.read_lineage(spark, out).collect()
+    assert sorted(r["warc_day"] for r in rows) == s.pending_days
+    counters = [c for c in LINEAGE_SCHEMA.names if c.startswith("n_")]
+    for r in rows:
+        assert all(r[c] == 0 for c in counters), r
+        assert r["attempt"] == 1
+
+    again = C.run_checkpointed(spark, pages, out, **window)
+    assert again.n_docs == 0 and not again.pending_days
+    assert sorted(again.skipped_days) == s.pending_days

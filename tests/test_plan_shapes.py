@@ -21,6 +21,21 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _python_rdd_scans(df) -> list[str]:
+    """RDD lineages of the plan's leaf scans that read a Python-side RDD
+    — what ``spark.createDataFrame(<python list>)`` plans. A
+    checkpoint's ``Scan ExistingRDD`` reads a JVM RDD and is not one."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "RDDScanExec":
+            lineage = leaf.rdd().toDebugString()
+            if "PythonRDD" in lineage:
+                out.append(lineage)
+    return out
+
+
 def test_extraction_plan_is_narrow(spark, pages_path):
     """scan -> project -> kernel, ZERO shuffles (no Exchange nodes)."""
     plan = _plan(X.extract(X.read_pages(spark, pages_path)))
@@ -414,3 +429,54 @@ def test_content_type_gate_keeps_narrow_plan(spark, pages_path, tmp_path):
     assert "content_type" in scan and "text" not in scan.replace(
         "content_type", ""
     )
+
+
+def test_driver_rows_are_local_table_scans(spark, tmp_path):
+    """Frames of driver-held rows are LocalTableScans, not Python-RDD
+    scans that start Python workers at every use: the near-dup
+    singleton row, the URL blocklist and the compaction plan table."""
+    from pyspark.sql import functions as F
+
+    from tesseract_ocr_service_spark.operators import queries as Q
+    from tesseract_ocr_service_spark.plans import compact as C
+    from tests.test_entry_oracle import SF_DIR
+
+    # the probe itself sees a Python-list frame
+    assert len(_python_rdd_scans(spark.createDataFrame([(1,)], "a int"))) == 1
+
+    root = str(tmp_path / "frag")
+    spark.range(0, 40).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 2).cast("string").alias("day"),
+    ).write.partitionBy("day").parquet(root)
+    for df in [
+        Q.neardup_cluster_sizes(spark, SF_DIR),
+        Q.url_host_filter(spark, SF_DIR),
+        C.plan_compaction(spark, root, target_bytes=1 << 30)[0],
+    ]:
+        assert _python_rdd_scans(df) == []
+        assert "LocalTableScan" in _plan(df)
+
+
+def test_commit_marker_is_a_local_table_scan(spark, pages_path, tmp_path):
+    """Every SQL execution of a checkpointed run — the anti-join, the
+    data write, the counter scan and the lineage append — plans no
+    ``Scan ExistingRDD``; the marker frame is a LocalTableScan."""
+    from tesseract_ocr_service_spark.plans import commit as C
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    C.run_checkpointed(spark, pages_path, str(tmp_path / "out"),
+                       ts_to="2026-01-03")
+    plans = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > last
+    ]
+    assert any("LocalTableScan" in p for p in plans)
+    assert [p for p in plans if "ExistingRDD" in p] == []
